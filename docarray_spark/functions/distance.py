@@ -98,6 +98,46 @@ def resolve_metric(metric) -> Callable:
     return _scipy
 
 
+# ------------------------------------------------- partial top-k (map side)
+#
+# A map-side prune may keep a SUPERSET of each query's k nearest, never an
+# arbitrary subset of a tie: the global ``row_number`` over
+# ``(score, match_id)`` can only break ties among the rows that reach it.
+# So both helpers keep every score ≤ the k-th smallest (boundary ties
+# retained) and leave the final k to the rank window. NaN sorts after
+# every number, as in Spark's ordering; a row whose k-th score is NaN
+# keeps all its entries (its NaN ties included) instead of none.
+
+
+def topk_keep(d: np.ndarray, k: int | None) -> tuple[np.ndarray, np.ndarray]:
+    """``(row, col)`` indices of the entries of the score matrix ``d``
+    (queries × candidates) that a partial top-k keeps; ``k=None`` keeps
+    everything."""
+    n = d.shape[1]
+    kk = n if k is None else min(k, n)
+    if kk == n:
+        return np.divmod(np.arange(d.size), n)
+    thr = np.partition(d, kth=kk - 1, axis=1)[:, kk - 1]
+    keep = d <= thr[:, None]
+    keep[np.isnan(thr)] = True
+    # flatnonzero + divmod: ~10x faster than a 2-D np.nonzero here
+    return np.divmod(np.flatnonzero(keep), n)
+
+
+def grouped_topk_keep(qi: np.ndarray, s: np.ndarray, k: int | None) -> np.ndarray:
+    """Indices of the flat candidates ``(query index qi, score s)`` that a
+    per-query partial top-k keeps — the merge of several
+    :func:`topk_keep` outputs; ``k=None`` keeps everything."""
+    if k is None or len(qi) == 0:
+        return np.arange(len(qi))
+    order = np.lexsort((s, qi))  # by query, then score with NaN last
+    qi_o, s_o = qi[order], s[order]
+    start = np.flatnonzero(np.r_[True, qi_o[1:] != qi_o[:-1]])
+    size = np.diff(np.r_[start, len(qi_o)])
+    thr = np.repeat(s_o[start + np.minimum(k, size) - 1], size)
+    return order[(s_o <= thr) | np.isnan(thr)]
+
+
 # ------------------------------------------------------- Column expressions
 
 def rounded_rank_key(col: Column | str, round_to: int | None) -> Column:

@@ -29,8 +29,10 @@ from pyspark.sql import functions as F
 
 from docarray_spark.functions.distance import (
     cosine_distance_col,
+    grouped_topk_keep,
     pair_distance_udf,
     sqeuclidean_distance_col,
+    topk_keep,
 )
 from docarray_spark.functions.lsh import signatures_udf
 
@@ -323,7 +325,6 @@ def _ivf_match_vectorized(
 
     def _partition_topk(batches):
         q_ids, q_mat, c2q, met = bc.value
-        nq = len(q_ids)
         qarr = np.asarray(q_ids, dtype=object)
         acc_q, acc_s, acc_i = [], [], []
         for pdf in batches:
@@ -352,13 +353,7 @@ def _ivf_match_vectorized(
                     )
                     if met == "euclidean":
                         d = np.sqrt(d)
-                kk = min(k, d.shape[1])
-                thr = (
-                    np.partition(d, kth=kk - 1, axis=1)[:, kk - 1]
-                    if kk < d.shape[1]
-                    else d.max(axis=1)
-                )
-                qi_loc, ci = np.nonzero(d <= thr[:, None])
+                qi_loc, ci = topk_keep(d, k)
                 acc_q.append(np.asarray(qidx)[qi_loc])
                 acc_s.append(d[qi_loc, ci])
                 acc_i.append(ids[ci])
@@ -366,20 +361,13 @@ def _ivf_match_vectorized(
             return
         qi = np.concatenate(acc_q)
         s = np.concatenate(acc_s)
-        mids = np.concatenate(acc_i)
-        order = np.lexsort((s, qi))
-        qi, s, mids = qi[order], s[order], mids[order]
-        starts = np.searchsorted(qi, np.arange(nq), side="left")
-        ends = np.searchsorted(qi, np.arange(nq), side="right")
-        keep = np.zeros(len(qi), dtype=bool)
-        for i in range(nq):
-            lo, hi = starts[i], ends[i]
-            if lo == hi:
-                continue
-            kk = min(k, hi - lo)
-            keep[lo:hi] = s[lo:hi] <= s[lo + kk - 1]
+        keep = grouped_topk_keep(qi, s, k)
         yield pd.DataFrame(
-            {"query_id": qarr[qi[keep]], "match_id": mids[keep], "score": s[keep]}
+            {
+                "query_id": qarr[qi[keep]],
+                "match_id": np.concatenate(acc_i)[keep],
+                "score": s[keep],
+            }
         )
 
     cand = assigned.select("cell", "id", "v").mapInPandas(_partition_topk, out_schema)

@@ -11,7 +11,11 @@ distributed:
    is broadcast to every corpus partition; each partition streams its rows
    through the numpy distance kernel keeping only a running top-k per query
    (plus the partition-wide min/max per query when normalization is on).
-   Shuffle output is O(partitions × queries × k), never O(N × Q).
+   The prune keeps every candidate whose score is ≤ the k-th score, so a
+   tie at the k-th slot survives whole and the reduce phase's ``match_id``
+   tie-break sees all of it — the result does not depend on how the corpus
+   is partitioned (``functions.distance.topk_keep``). Shuffle output is
+   O(partitions × queries × k) plus boundary ties, never O(N × Q).
 2. **reduce phase**: one hash shuffle on ``query_id``; ``row_number`` over
    ``(score, match_id)`` gives the global rank with a deterministic
    tie-break; normalization bounds fold with ``min/max`` windows over the
@@ -35,7 +39,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from docarray_spark.functions.distance import resolve_metric
+from docarray_spark.functions.distance import (
+    grouped_topk_keep,
+    resolve_metric,
+    topk_keep,
+)
 from docarray_spark.queryset.compiler import compile_filter
 
 _MINMAX_EPS = 1e-7  # reference math/helper.py:6-37
@@ -114,8 +122,9 @@ def match(
     def _partition_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         q_ids, q_mat = bc.value
         nq = len(q_ids)
-        cand_scores: list[np.ndarray] = []  # each (nq, <=k)
-        cand_ids: list[np.ndarray] = []
+        acc_q: list[np.ndarray] = []  # flat candidates: query index, score, id
+        acc_s: list[np.ndarray] = []
+        acc_i: list[np.ndarray] = []
         pmin = np.full(nq, np.inf)
         pmax = np.full(nq, -np.inf)
         for pdf in batches:
@@ -137,35 +146,27 @@ def match(
             if exclude_self:
                 same = np.asarray(q_ids)[:, None] == ids[None, :]
                 d = np.where(same, np.inf, d)
-            kk = d.shape[1] if k is None else min(k, d.shape[1])
-            idx = (
-                np.argpartition(d, kth=kk - 1, axis=1)[:, :kk]
-                if kk < d.shape[1]
-                else np.tile(np.arange(d.shape[1]), (nq, 1))
-            )
-            cand_scores.append(np.take_along_axis(d, idx, axis=1))
-            cand_ids.append(ids[idx])
-        if not cand_scores:
+            qi, ci = topk_keep(d, k)
+            acc_q.append(qi)
+            acc_s.append(d[qi, ci])
+            acc_i.append(ids[ci])
+        if not acc_q:
             return
-        scores = np.hstack(cand_scores)  # (nq, C)
-        mids = np.hstack(cand_ids)
-        kk = scores.shape[1] if k is None else min(k, scores.shape[1])
-        if kk < scores.shape[1]:
-            idx = np.argpartition(scores, kth=kk - 1, axis=1)[:, :kk]
-            scores = np.take_along_axis(scores, idx, axis=1)
-            mids = np.take_along_axis(mids, idx, axis=1)
-        keep = ~np.isinf(scores).ravel()
-        n = scores.shape[1]
-        out = pd.DataFrame(
+        qi = np.concatenate(acc_q)
+        scores = np.concatenate(acc_s)
+        mids = np.concatenate(acc_i)
+        sel = grouped_topk_keep(qi, scores, k)
+        sel = sel[~np.isinf(scores[sel])]
+        qi = qi[sel]
+        yield pd.DataFrame(
             {
-                "query_id": np.repeat(q_ids, n)[keep],
-                "match_id": mids.ravel()[keep],
-                "score": scores.ravel()[keep],
-                "pmin": np.repeat(pmin, n)[keep],
-                "pmax": np.repeat(pmax, n)[keep],
+                "query_id": np.asarray(q_ids)[qi],
+                "match_id": mids[sel],
+                "score": scores[sel],
+                "pmin": pmin[qi],
+                "pmax": pmax[qi],
             }
         )
-        yield out
 
     cand = corpus.select(corpus_id_col, on).mapInPandas(_partition_topk, out_schema)
 
@@ -258,6 +259,11 @@ def knn_graph(
     block-join replication every BNL join pays); pick ``n_blocks`` so a
     block pair (~2·N/B rows) fits an executor.
 
+    Each block pair's partial top-k keeps every candidate whose score is
+    ≤ its k-th score (boundary ties retained, as in ``match``), so the
+    final window breaks ties over all of them and the graph does not
+    depend on ``n_blocks`` or partitioning.
+
     → (query_id, match_id, rank, score, metric_name), rank 1..k ascending
     distance, deterministic match_id tie-break."""
     kernel = resolve_metric(metric)
@@ -307,21 +313,11 @@ def knn_graph(
         d = kernel(q_mat, c_mat, eps=eps)
         if exclude_self:
             d = np.where(q_ids[:, None] == c_ids[None, :], np.inf, d)
-        kk = min(k, d.shape[1])
-        idx = (
-            np.argpartition(d, kth=kk - 1, axis=1)[:, :kk]
-            if kk < d.shape[1]
-            else np.tile(np.arange(d.shape[1]), (len(q_ids), 1))
-        )
-        scores = np.take_along_axis(d, idx, axis=1)
-        keep = ~np.isinf(scores).ravel()
-        n = scores.shape[1]
+        qi, ci = topk_keep(d, k)
+        keep = ~np.isinf(d[qi, ci])
+        qi, ci = qi[keep], ci[keep]
         return pd.DataFrame(
-            {
-                "query_id": np.repeat(q_ids, n)[keep],
-                "match_id": c_ids[idx].ravel()[keep],
-                "score": scores.ravel()[keep],
-            }
+            {"query_id": q_ids[qi], "match_id": c_ids[ci], "score": d[qi, ci]}
         )
 
     cand = tasks.groupBy("_qb", "_cb").applyInPandas(_block_pair_topk, out_schema)

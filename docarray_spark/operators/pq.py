@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from docarray_spark.functions.distance import grouped_topk_keep, topk_keep
+
 _MAX_TRAIN_SAMPLE = 262144  # driver-collect budget (same stance as match())
 _MAX_QUERY_ROWS = 65536
 
@@ -312,7 +314,6 @@ def pq_match(
         # the global result depend on partitioning. The window merge
         # enforces the final k with its deterministic tie-break.
         q_ids, q_lut = bc.value
-        nq = len(q_ids)
         qarr = np.asarray(q_ids, dtype=object)
         acc_q: list[np.ndarray] = []
         acc_s: list[np.ndarray] = []
@@ -326,13 +327,7 @@ def pq_match(
                 b"".join(pdf[codes_col][mask]), dtype=np.uint8
             ).reshape(-1, m)
             d = _adc_scores(q_lut, codes)
-            kk = min(k, d.shape[1])
-            thr = (
-                np.partition(d, kth=kk - 1, axis=1)[:, kk - 1]
-                if kk < d.shape[1]
-                else d.max(axis=1)
-            )
-            qi, ci = np.nonzero(d <= thr[:, None])
+            qi, ci = topk_keep(d, k)
             acc_q.append(qi)
             acc_s.append(d[qi, ci])
             acc_i.append(ids[ci])
@@ -340,22 +335,11 @@ def pq_match(
             return
         qi = np.concatenate(acc_q)
         s = np.concatenate(acc_s)
-        mids = np.concatenate(acc_i)
-        order = np.lexsort((s, qi))
-        qi, s, mids = qi[order], s[order], mids[order]
-        starts = np.searchsorted(qi, np.arange(nq), side="left")
-        ends = np.searchsorted(qi, np.arange(nq), side="right")
-        keep = np.zeros(len(qi), dtype=bool)
-        for i in range(nq):
-            lo, hi = starts[i], ends[i]
-            if lo == hi:
-                continue
-            kk = min(k, hi - lo)
-            keep[lo:hi] = s[lo:hi] <= s[lo + kk - 1]
+        keep = grouped_topk_keep(qi, s, k)
         yield pd.DataFrame(
             {
                 "query_id": qarr[qi[keep]],
-                "match_id": mids[keep],
+                "match_id": np.concatenate(acc_i)[keep],
                 "score": s[keep],
             }
         )
@@ -582,9 +566,10 @@ def ivfpq_match(
 
     def _partition_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         q_ids, q_lut, q_cells = bc.value
-        cand: dict[int, tuple[list, list]] = {
-            i: ([], []) for i in range(len(q_ids))
-        }
+        qarr = np.asarray(q_ids, dtype=object)
+        acc_q: list[np.ndarray] = []
+        acc_s: list[np.ndarray] = []
+        acc_i: list[np.ndarray] = []
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -597,30 +582,25 @@ def ivfpq_match(
                 sel = np.isin(cells, list(q_cells[qid]))
                 if not sel.any():
                     continue
-                d = _adc_scores(q_lut[i : i + 1], codes[sel])[0]
-                kk = min(k, len(d))
+                d = _adc_scores(q_lut[i : i + 1], codes[sel])
                 # keep boundary TIES (equal codes → equal scores): see
                 # pq_match — partition pruning must not arbitrate ties
-                thr = np.partition(d, kth=kk - 1)[kk - 1] if kk < len(d) else d.max()
-                m_keep = d <= thr
-                cand[i][0].append(d[m_keep])
-                cand[i][1].append(ids[sel][m_keep])
-        rows_q, rows_m, rows_s = [], [], []
-        for i, qid in enumerate(q_ids):
-            if not cand[i][0]:
-                continue
-            d = np.concatenate(cand[i][0])
-            ids = np.concatenate(cand[i][1])
-            kk = min(k, len(d))
-            thr = np.partition(d, kth=kk - 1)[kk - 1] if kk < len(d) else d.max()
-            m_keep = d <= thr
-            rows_q += [qid] * int(m_keep.sum())
-            rows_m += list(ids[m_keep])
-            rows_s += list(d[m_keep])
-        if rows_q:
-            yield pd.DataFrame(
-                {"query_id": rows_q, "match_id": rows_m, "score": rows_s}
-            )
+                _, ci = topk_keep(d, k)
+                acc_q.append(np.full(len(ci), i))
+                acc_s.append(d[0, ci])
+                acc_i.append(ids[sel][ci])
+        if not acc_q:
+            return
+        qi = np.concatenate(acc_q)
+        s = np.concatenate(acc_s)
+        keep = grouped_topk_keep(qi, s, k)
+        yield pd.DataFrame(
+            {
+                "query_id": qarr[qi[keep]],
+                "match_id": np.concatenate(acc_i)[keep],
+                "score": s[keep],
+            }
+        )
 
     cand = pruned.select("id", "cell", "codes").mapInPandas(
         _partition_topk, out_schema
@@ -807,7 +787,6 @@ def sq_match(
         # straddle the k-th score (ADVICE r5). The window merge enforces
         # the final k with its deterministic tie-break.
         q_ids, q_mat, b_mins, b_scale = bc.value
-        nq = len(q_ids)
         qarr = np.asarray(q_ids, dtype=object)
         acc_q: list[np.ndarray] = []
         acc_s: list[np.ndarray] = []
@@ -832,13 +811,7 @@ def sq_match(
                     - 2.0 * q_mat @ mat.T
                     + (mat**2).sum(1)[None, :]
                 )
-            kk = min(k, d.shape[1])
-            thr = (
-                np.partition(d, kth=kk - 1, axis=1)[:, kk - 1]
-                if kk < d.shape[1]
-                else d.max(axis=1)
-            )
-            qi, ci = np.nonzero(d <= thr[:, None])
+            qi, ci = topk_keep(d, k)
             acc_q.append(qi)
             acc_s.append(d[qi, ci])
             acc_i.append(ids[ci])
@@ -846,22 +819,11 @@ def sq_match(
             return
         qi = np.concatenate(acc_q)
         s = np.concatenate(acc_s)
-        mids = np.concatenate(acc_i)
-        order = np.lexsort((s, qi))
-        qi, s, mids = qi[order], s[order], mids[order]
-        starts = np.searchsorted(qi, np.arange(nq), side="left")
-        ends = np.searchsorted(qi, np.arange(nq), side="right")
-        keep = np.zeros(len(qi), dtype=bool)
-        for i in range(nq):
-            lo, hi = starts[i], ends[i]
-            if lo == hi:
-                continue
-            kk = min(k, hi - lo)
-            keep[lo:hi] = s[lo:hi] <= s[lo + kk - 1]
+        keep = grouped_topk_keep(qi, s, k)
         yield pd.DataFrame(
             {
                 "query_id": qarr[qi[keep]],
-                "match_id": mids[keep],
+                "match_id": np.concatenate(acc_i)[keep],
                 "score": s[keep],
             }
         )

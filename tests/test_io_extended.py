@@ -1092,10 +1092,26 @@ def test_read_files_options(spark, tmp_path):
     # size caps; list-of-patterns accepted
     assert read_files(spark, [str(d / "*.txt")], size=3).count() == 3
 
-    # sampling is deterministic (same subset twice) and roughly thins
-    s1 = {r.uri for r in read_files(spark, str(d / "*"), sampling_rate=0.5).collect()}
-    s2 = {r.uri for r in read_files(spark, str(d / "*"), sampling_rate=0.5).collect()}
-    assert s1 == s2 and len(s1) < 7
+    # sampling is deterministic (same subset twice) and keeps exactly the
+    # paths the documented rule keeps: md5(path)[:8] as a fraction of 2**32
+    # below the rate. The rule hashes the full (random) tmp path, so the
+    # sample is drawn from 64 files: the chance that a rate-0.5 sample
+    # keeps all of them, which would leave nothing thinned, is 2**-64.
+    import hashlib
+
+    sd = tmp_path / "sampled"
+    sd.mkdir()
+    for i in range(64):
+        (sd / f"s{i}.bin").write_bytes(b"x")
+    listed = {r.uri for r in read_files(spark, str(sd / "*"), read_mode=None).collect()}
+    expected = {
+        u for u in listed
+        if int(hashlib.md5(u.encode()).hexdigest()[:8], 16) / 2**32 < 0.5
+    }
+    assert len(listed) == 64 and expected < listed
+    s1 = {r.uri for r in read_files(spark, str(sd / "*"), sampling_rate=0.5).collect()}
+    s2 = {r.uri for r in read_files(spark, str(sd / "*"), sampling_rate=0.5).collect()}
+    assert s1 == s2 == expected
 
     # datauri mode embeds the content; mimetype guessed from the
     # extension (reference mimetypes.guess_type, data.py:57)
