@@ -17,7 +17,6 @@ from docarray_spark.operators import (
     dup_groups,
     embed,
     set_along_path,
-    embedding_dup_pairs,
     group_counts,
     hash_sample,
     lang_id,
@@ -35,7 +34,6 @@ from docarray_spark.operators.evaluation import METRICS
 from docarray_spark.operators.indexing import (
     delete_where,
     pop_attrs,
-    select_attrs,
     set_attrs_where,
     slice_by_offset,
     update_by_id,
@@ -179,11 +177,6 @@ def q_reduce_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("id"), "text", F.lit(-1).cast("long").alias("n_chars")
     )
     return reduce_docs(left, right)
-
-
-def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic engine-portable sampling (extension; cf. sample.py:11-29)."""
-    return hash_sample(_t(spark, sf_dir, "documents"), "doc_id", 0.5)
 
 
 def q_cube_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -364,30 +357,6 @@ def q_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------------- text analysis (pipeline ops)
 
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality scoring: token count, avg word length, type-token ratio,
-    stopword ratio, composite quality score — all JVM-side expressions."""
-    docs = _t(spark, sf_dir, "documents")
-    out = text_stats(docs)
-    return out.select(
-        "doc_id",
-        "lang",
-        F.col("token_count").cast("long").alias("token_count"),
-        F.round("avg_word_len", 6).alias("avg_word_len"),
-        F.round("type_token_ratio", 6).alias("type_token_ratio"),
-        F.round("stopword_ratio", 6).alias("stopword_ratio"),
-        F.round("quality_score", 6).alias("quality_score"),
-    )
-
-
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-profile language ID with alphabetical tie-break."""
-    docs = _t(spark, sf_dir, "documents")
-    return lang_id(docs).select(
-        "doc_id", "lang", "lang_pred", F.round("lang_pred_score", 6).alias("lang_pred_score")
-    )
-
-
 def q_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher rule-based quality filter (Rae et al. 2021 Table A1): word
     bounds, mean word length, alpha-word fraction, stopword presence,
@@ -412,21 +381,6 @@ def q_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
         extra_cols=[c for c in rep.columns if c not in ("doc_id", "text")],
     )
     return rules.withColumn("keep_all", F.col("keep") & F.col("rep_keep"))
-
-
-def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting two ways — whitespace tokens and a GPT-2-style
-    BPE-ish pre-tokenizer count (RE2-safe regex so the oracle counts the
-    same boundaries). Both are map-only regexp projections, no explode."""
-    from docarray_spark.operators import bpe_token_count_col
-
-    docs = _t(spark, sf_dir, "documents")
-    ws = F.size(F.filter(F.split(F.trim("text"), r"\s+"), lambda x: x != ""))
-    return docs.select(
-        "doc_id",
-        ws.cast("long").alias("ws_tokens"),
-        bpe_token_count_col(F.col("text")).alias("bpe_tokens"),
-    )
 
 
 def q_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -734,12 +688,6 @@ def q_embed_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """get_vocabulary (array/mixins/text.py:8-29): corpus word frequencies
-    with deterministic token ids (0=pad, 1=unk, ids from 2)."""
-    return vocabulary(_t(spark, sf_dir, "documents"), min_count=5)
-
-
 # ------------------------------------------------------- dedup (pipeline ops)
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -766,30 +714,6 @@ def _docs_with_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return docs.unionByName(copies)
-
-
-def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs: 3-word shingles → (b=16, r=2) banded
-    minhashes → bucket join → exact Jaccard ≥ 0.4."""
-    base = _docs_with_neardups(spark, sf_dir)
-    return minhash_dedup_pairs(
-        base, id_col="id", text_col="text", shingle_n=3, num_bands=16,
-        threshold=0.4, round_to=6, num_rows=2,
-    )
-
-
-def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT all-pairs n-gram Jaccard (shingle inverted-index self-join) on
-    the same near-dup corpus as the LSH entry — the ground-truth pair set
-    the LSH path approximates. No banding, no hashing: join volume is
-    Σ df(shingle)² (bounded here; cap with max_df at open-web scale)."""
-    from docarray_spark.operators import ngram_jaccard_exact_pairs
-
-    base = _docs_with_neardups(spark, sf_dir)
-    return ngram_jaccard_exact_pairs(
-        base, id_col="id", text_col="text", shingle_n=3, threshold=0.4,
-        round_to=6,
-    )
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -833,25 +757,6 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs over embeddings ∪ perturbed copies
-    (every 20th vector +0.01 per component). LSH hyperplane bucketing with
-    exact cosine verification."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("id"),
-        F.expr("transform(embedding, x -> cast(x as double))").alias("embedding"),
-    )
-    copies = emb.filter(F.col("id") % 20 == 0).select(
-        (F.col("id") + 100000).alias("id"),
-        F.expr("transform(embedding, x -> x + 0.01d)").alias("embedding"),
-    )
-    base = emb.unionByName(copies)
-    return embedding_dup_pairs(
-        base, id_col="id", threshold=0.01, method="lsh",
-        num_planes=12, num_tables=8, seed=42, round_to=6, dim=64,
-    )
-
-
 # ------------------------------------------- indexing / CRUD / content ops
 
 def q_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -867,49 +772,6 @@ def q_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     save_parquet(docs, out_dir, partition_by=["lang"])
     back = spark.read.parquet(out_dir)
     return back.select("doc_id", "text", "lang", "source", "n_chars")
-
-
-def q_slice_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Advanced indexing da[100:400:3][:, ('doc_id','text')]: offset-range +
-    step slice, then attribute projection (getitem.py:48-107)."""
-    docs = _t(spark, sf_dir, "documents").withColumn("offset", F.col("doc_id"))
-    sliced = slice_by_offset(docs, 100, 400, step=3)
-    return select_attrs(sliced, ["doc_id", "text", "n_chars"])
-
-
-def q_crud_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """setitem/delitem composition (setitem.py:61-244, delitem.py:19-78):
-    conditional bulk set, column pop (null-out), anti-filter delete."""
-    docs = _t(spark, sf_dir, "documents")
-    docs = set_attrs_where(
-        docs, F.col("source") == "src0", text=F.upper(F.col("text"))
-    )
-    docs = pop_attrs(docs, ["lang"])
-    return delete_where(docs, F.col("n_chars") > 900)
-
-
-def q_update_by_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point updates arriving as a table, merged by id with incoming-priority
-    coalesce (setitem by id; Delta-MERGE-shaped broadcast join)."""
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("id"), "text", "source"
-    )
-    updates = docs.filter(F.col("id") % 7 == 0).select(
-        "id", F.lit("UPDATED").alias("text")
-    )
-    return update_by_id(docs, updates, id_col="id")
-
-
-def q_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashing-trick text embedding (featurehash.py:14-87): md5 token
-    buckets, exploded to (doc_id, bucket, count) for exact oracle compare."""
-    docs = _t(spark, sf_dir, "documents")
-    hashed = feature_hash(docs, id_col="doc_id", n_dims=16, out_col="vec")
-    return (
-        hashed.select("doc_id", F.posexplode("vec").alias("bucket", "cnt"))
-        .filter(F.col("cnt") > 0)
-        .select("doc_id", "bucket", F.col("cnt").cast("long").alias("cnt"))
-    )
 
 
 def q_datauri(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1062,26 +924,6 @@ def q_ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup pairs where the ORACLE mirrors the LSH bucketing
-    itself (md5-derived hyperplane signatures as literal ±1 arrays in SQL):
-    the hash gate pins candidate generation, not just the verified output.
-    Complements `dedup_embedding`, whose oracle is the exact all-pairs set."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("id"),
-        F.expr("transform(embedding, x -> cast(x as double))").alias("embedding"),
-    )
-    copies = emb.filter(F.col("id") % 20 == 0).select(
-        (F.col("id") + 100000).alias("id"),
-        F.expr("transform(embedding, x -> x + 0.01d)").alias("embedding"),
-    )
-    base = emb.unionByName(copies)
-    return embedding_dup_pairs(
-        base, id_col="id", threshold=0.05, method="lsh",
-        num_planes=12, num_tables=4, seed=42, round_to=6, dim=64,
-    )
-
-
 # ------------------------------------------------------- multimodal pipeline
 
 def q_mm_image_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1164,21 +1006,6 @@ def q_mm_image_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------- round-2 pipeline extensions
 
 
-def q_wire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc wire codec roundtrip (``Document.to_bytes``/``from_bytes``,
-    reference ``document/mixins/porting.py:85-130``): every doc serialized
-    to a gzip'd JSON frame (Arrow-batched pandas_udf) then decoded back via
-    mapInPandas — identity on the doc fields, fully distributed."""
-    from docarray_spark.functions import docs_from_bytes, docs_to_bytes
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    ser = docs_to_bytes(docs, protocol="json", compress="gzip")
-    return docs_from_bytes(
-        ser, "doc_id bigint, text string, lang string",
-        protocol="json", compress="gzip",
-    )
-
-
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concat-and-chunk sequence packing (per-source groups, 256-token
     bins): one hash exchange on the group key; the cumsum window and the
@@ -1195,19 +1022,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_summary(
         docs, capacity=256, token_col="n_tokens",
         group_col="source", order_col="doc_id",
-    )
-
-
-def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified sampling: per-source keep fractions (corpus
-    mixing weights), md5-threshold so it is engine-portable and
-    reproducible across partitionings. Map-only — fuses into the scan."""
-    from docarray_spark.operators import stratified_hash_sample
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "lang")
-    return stratified_hash_sample(
-        docs, "source", {"src0": 0.8, "src1": 0.25, "src2": 0.5},
-        id_col="doc_id", default_fraction=0.1,
     )
 
 
@@ -1282,17 +1096,6 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmeans_summary(emb, k=8, n_iter=2, id_col="vec_id", emb_col="embedding")
 
 
-def q_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus bigram counts, top 50 (count desc, gram asc): ONE
-    map-side-combinable hash aggregation; the top-k compiles to
-    TakeOrderedAndProject."""
-    from docarray_spark.operators import ngram_counts
-
-    return ngram_counts(_t(spark, sf_dir, "documents"), "text", n=2, top=50)
-
-
-
-
 def q_tfidf_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparse TF-IDF triples over the documents corpus (exact-vocabulary
     sparse embeddings; sf-bounded slice so the gate compares a stable
@@ -1303,34 +1106,6 @@ def q_tfidf_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     out = tfidf_vectors(docs, id_col="doc_id", text_col="text")
     return out.filter(F.col("doc_id") < 100)
-
-
-
-
-def q_cap_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source document cap (the C4/RefinedWeb "at most N docs per
-    domain" rebalancing): keep the 15 smallest-md5 docs of each source.
-    One exchange on the group key."""
-    from docarray_spark.operators import cap_per_group
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "lang")
-    return cap_per_group(docs, "source", 15, id_col="doc_id")
-
-
-def q_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test split labels (98/1/1) + per-split
-    counts; md5-interval assignment, map-only before the rollup."""
-    from docarray_spark.operators import with_split
-
-    docs = _t(spark, sf_dir, "documents")
-    labeled = with_split(
-        docs, {"train": 0.98, "val": 0.01, "test": 0.01}, id_col="doc_id"
-    )
-    return labeled.groupBy("split").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("doc_id").alias("min_id"),
-        F.max("doc_id").alias("max_id"),
-    )
 
 
 
@@ -1379,21 +1154,6 @@ def q_embed_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pooled.select(
         "label", "n_members", F.posexplode("pooled").alias("dim", "value")
     ).select("label", "n_members", F.col("dim").cast("long").alias("dim"), "value")
-
-
-
-
-def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-weighted resampling: each doc kept with probability equal to
-    its (deterministic) quality weight — here length-derived,
-    least(1, n_chars/300). Map-only md5-uniform draw, fused into the scan."""
-    from docarray_spark.operators import weighted_hash_sample
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "source",
-        F.least(F.lit(1.0), F.col("n_chars") / 300.0).alias("weight"),
-    )
-    return weighted_hash_sample(docs, "weight", id_col="doc_id")
 
 
 

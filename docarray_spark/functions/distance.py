@@ -4,9 +4,9 @@ Two tiers, mirroring the reference's dispatch
 (``/root/reference/docarray/math/distance/__init__.py:23-121``):
 
 * **numpy kernels** (``cosine``/``sqeuclidean``/``euclidean``,
-  ``math/distance/numpy.py:9,27,83``) — used inside Arrow-batched
-  ``mapInPandas`` by the match operator; BLAS matrix-matrix products, the
-  fast path for bulk kNN.
+  ``math/distance/numpy.py:9,27,83``) — used inside ``mapInArrow`` by the
+  match operator on matrices from ``functions.vectors.as_matrix``; BLAS
+  matrix-matrix products, the fast path for bulk kNN.
 * **Column expressions** — pure Catalyst higher-order functions
   (``zip_with`` + ``aggregate``), JVM-side, for per-pair distances inside
   joins (e.g. embedding near-dup joins) where no batching is possible.
@@ -21,9 +21,11 @@ from __future__ import annotations
 from typing import Callable
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from docarray_spark.functions.vectors import as_matrix
 
 
 # ------------------------------------------------------------ numpy kernels
@@ -189,54 +191,33 @@ def euclidean_distance_col(a: Column | str, b: Column | str) -> Column:
 # The Column forms above are higher-order AGGREGATE expressions —
 # CodegenFallback, every element evaluated through the interpreted
 # expression tree (the r12 stage profile measured ~10 s of task time for
-# ~4k joined 128-d pairs). These pandas_udf twins accumulate in DIMENSION
+# ~4k joined 128-d pairs). These arrow_udf twins accumulate in DIMENSION
 # ORDER with the identical float64 operation sequence (x*y products /
 # diff*diff squares, left-to-right adds starting at 0.0, then the same
 # sqrt/divide/subtract order), so their values are bit-for-bit the fold
 # forms' — pinned in tests/test_distance_pairs.py — at Arrow-batch speed.
-# zip_with's unequal-length null padding (→ NULL result) and NULL-input
-# propagation are mirrored.
+# zip_with's NULL semantics are mirrored: a NULL input, a NULL element or
+# unequal lengths give a NULL distance. Rows of mixed lengths run the
+# dimension-order loop once per distinct length.
 
 
 def pair_distance_udf(metric: str):
-    """→ pandas_udf ``(a, b) -> double`` mirroring
+    """→ arrow_udf ``(a, b) -> double`` mirroring
     ``{metric}_distance_col`` bit-for-bit (see block comment)."""
     if metric not in ("cosine", "sqeuclidean", "euclidean"):
         raise ValueError(f"no Arrow pair kernel for metric {metric!r}")
 
-    def _f64(v):
-        # a vector containing a NULL element (None in an object array) makes
-        # np.asarray(..., float64) raise TypeError and would kill the whole
-        # Arrow task, whereas the zip_with fold propagates a NULL distance
-        # for just that row (ADVICE r12 #2) — mirror the fold: unconvertible
-        # rows become NULL output via the ok mask.
-        try:
-            arr = np.asarray(v, dtype=np.float64)
-        except (TypeError, ValueError):
-            return None
-        return arr
-
-    @F.pandas_udf("double")
-    def _dist(a: pd.Series, b: pd.Series) -> pd.Series:
-        n = len(a)
-        out = np.full(n, np.nan, dtype=np.float64)
-        conv_a = [None if x is None else _f64(x) for x in a]
-        conv_b = [None if y is None else _f64(y) for y in b]
-        ok = np.asarray([
-            x is not None and y is not None and len(x) == len(y)
-            for x, y in zip(conv_a, conv_b)
-        ])
-        if ok.any():
-            xs = [x for x, o in zip(conv_a, ok) if o]
-            ys = [y for y, o in zip(conv_b, ok) if o]
-            if len({v.shape[0] for v in xs}) > 1:
-                # mixed dims in one batch: row-at-a-time, same op order
-                vals = np.asarray([
-                    _pair_one(metric, x, y) for x, y in zip(xs, ys)
-                ])
-                out[ok] = vals
-                return _null_mask(out, ok)
-            X, Y = np.asarray(xs), np.asarray(ys)
+    @F.arrow_udf("double")
+    def _dist(a: pa.Array, b: pa.Array) -> pa.Array:
+        out = np.zeros(len(a), dtype=np.float64)
+        ok = np.zeros(len(a), dtype=bool)
+        lens = a.value_lengths().fill_null(-1).to_numpy()
+        for d in np.unique(lens[lens >= 0]):
+            X, va = as_matrix(a, dim=int(d))
+            Y, vb = as_matrix(b, dim=int(d))
+            rows = va & vb
+            X, Y = X[rows], Y[rows]
+            ok |= rows
             m = len(X)
             if metric == "cosine":
                 dot = np.zeros(m); na = np.zeros(m); nb = np.zeros(m)
@@ -244,35 +225,14 @@ def pair_distance_udf(metric: str):
                     dot += X[:, j] * Y[:, j]
                     na += X[:, j] * X[:, j]
                     nb += Y[:, j] * Y[:, j]
-                out[ok] = 1.0 - dot / (np.sqrt(na) * np.sqrt(nb))
+                out[rows] = 1.0 - dot / (np.sqrt(na) * np.sqrt(nb))
             else:
                 acc = np.zeros(m)
                 for j in range(X.shape[1]):
                     diff = X[:, j] - Y[:, j]
                     acc += diff * diff
-                out[ok] = np.sqrt(acc) if metric == "euclidean" else acc
-        return _null_mask(out, ok)
+                out[rows] = np.sqrt(acc) if metric == "euclidean" else acc
+        # NaN (a zero-norm cosine) is NULL too, as the fold's 0/0 is
+        return pa.array(out, mask=~ok | np.isnan(out))
 
     return _dist
-
-
-def _pair_one(metric: str, x, y):
-    if metric == "cosine":
-        dot = na = nb = 0.0
-        for j in range(len(x)):
-            dot += x[j] * y[j]; na += x[j] * x[j]; nb += y[j] * y[j]
-        return 1.0 - dot / (np.sqrt(na) * np.sqrt(nb))
-    acc = 0.0
-    for j in range(len(x)):
-        d = x[j] - y[j]
-        acc += d * d
-    return np.sqrt(acc) if metric == "euclidean" else acc
-
-
-def _null_mask(out, ok):
-    """float results with true NULL (not NaN) on the rows the Column fold
-    would null out (zip_with length padding / NULL input)."""
-    if ok.all():
-        return pd.Series(out)
-    vals = [None if not o else v for o, v in zip(ok, out)]
-    return pd.Series(vals, dtype=object)

@@ -11,7 +11,7 @@ re-derive them, so LSH bucketing itself becomes DuckDB-oracle-checkable
 (VERDICT round 1, next-round item #1).
 
 Spark side computes all ``num_tables × num_planes`` sign bits per row in
-ONE Arrow-batched BLAS matmul (pandas_udf); the oracle side gets the same
+ONE Arrow-batched BLAS matmul (arrow_udf); the oracle side gets the same
 planes as literal ±1 arrays via :func:`signatures_sql_expr`. Both compute
 the dot products in float64; a sign can only disagree if a dot product
 lands within summation-order noise (~1e-13) of zero, which has measure
@@ -23,8 +23,10 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
+import pyarrow as pa
+from pyspark.sql.functions import arrow_udf
+
+from docarray_spark.functions.vectors import as_matrix, list_array
 
 
 def hyperplane_signs(
@@ -47,20 +49,21 @@ def hyperplane_signs(
 
 
 def signatures_udf(dim: int, num_tables: int, num_planes: int, seed: int = 42):
-    """pandas_udf: embedding array → array<long> of per-table signatures.
+    """arrow_udf: embedding array → array<long> of per-table signatures.
 
     One (batch × dim) @ (dim × tables·planes) BLAS matmul per Arrow batch
     computes every sign bit of every table at once; signature of table t =
-    Σ_p bit(t,p)·2^p."""
+    Σ_p bit(t,p)·2^p. A NULL, NULL-element or not-``dim``-long embedding
+    gets NULL signatures (no bucket)."""
     proj = hyperplane_signs(dim, num_tables, num_planes, seed).T.copy()
     weights = (1 << np.arange(num_planes)).astype(np.int64)
 
-    @pandas_udf("array<long>")
-    def signatures(embs: pd.Series) -> pd.Series:
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in embs])
+    @arrow_udf("array<long>")
+    def signatures(embs: pa.Array) -> pa.Array:
+        mat, valid = as_matrix(embs, dim=dim)
         bits = (mat @ proj) > 0
         sigs = bits.reshape(len(mat), num_tables, num_planes) @ weights
-        return pd.Series(list(sigs))
+        return list_array(sigs, valid)
 
     return signatures
 
@@ -69,7 +72,7 @@ def signatures_gate_udf(
     dim: int, num_tables: int, num_planes: int, seed: int = 42,
     n_chunks: int = 8,
 ):
-    """pandas_udf: embedding → struct(sigs array<long>, gate array<double>).
+    """arrow_udf: embedding → struct(sigs array<long>, gate array<double>).
 
     ``sigs`` is exactly :func:`signatures_udf`'s output (same planes, same
     BLAS matmul, same bit packing). ``gate`` carries the NORMALIZED CHUNK
@@ -83,15 +86,16 @@ def signatures_gate_udf(
     recall-safe candidate prefilter (guide §3.2 spirit; VERDICT r12 #1).
     Zero-norm vectors yield NaN gate entries; NaN comparisons are false, so
     such pairs drop at the gate — consistent with their NULL kernel
-    distance failing the final threshold filter anyway."""
+    distance failing the final threshold filter anyway. A NULL,
+    NULL-element or not-``dim``-long embedding gets a NULL struct."""
     proj = hyperplane_signs(dim, num_tables, num_planes, seed).T.copy()
     weights = (1 << np.arange(num_planes)).astype(np.int64)
     n_chunks = max(1, min(n_chunks, dim))
     bounds = np.linspace(0, dim, n_chunks + 1).astype(np.int64)
 
-    @pandas_udf("struct<sigs: array<long>, gate: array<double>>")
-    def signatures_gate(embs: pd.Series) -> pd.Series:
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in embs])
+    @arrow_udf("struct<sigs: array<long>, gate: array<double>>")
+    def signatures_gate(embs: pa.Array) -> pa.Array:
+        mat, valid = as_matrix(embs, dim=dim)
         bits = (mat @ proj) > 0
         sigs = bits.reshape(len(mat), num_tables, num_planes) @ weights
         sq = mat * mat
@@ -99,7 +103,11 @@ def signatures_gate_udf(
             np.add.reduceat(sq, bounds[:-1], axis=1)
         )  # (n, n_chunks) chunk norms
         u = cn / np.sqrt(sq.sum(axis=1))[:, None]
-        return pd.DataFrame({"sigs": list(sigs), "gate": list(u)})
+        return pa.StructArray.from_arrays(
+            [list_array(sigs), list_array(u, nan_is_null=True)],
+            names=["sigs", "gate"],
+            mask=pa.array(~valid),
+        )
 
     return signatures_gate
 

@@ -35,6 +35,7 @@ from docarray_spark.functions.distance import (
     topk_keep,
 )
 from docarray_spark.functions.lsh import signatures_udf
+from docarray_spark.functions.vectors import as_matrix
 
 _PAIR_DIST = {
     "cosine": cosine_distance_col,
@@ -281,8 +282,9 @@ def _ivf_match_vectorized(
 ) -> DataFrame:
     """Zero-shuffle IVF scorer (see ``ivf_match(vectorized=True)``)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     if metric not in _PAIR_DIST:
         raise ValueError(f"ivf_match supports {sorted(_PAIR_DIST)}, got {metric!r}")
@@ -323,21 +325,26 @@ def _ivf_match_vectorized(
         ]
     )
 
+    arrow_schema = to_arrow_schema(out_schema)
+
     def _partition_topk(batches):
         q_ids, q_mat, c2q, met = bc.value
         qarr = np.asarray(q_ids, dtype=object)
         acc_q, acc_s, acc_i = [], [], []
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            X, valid = as_matrix(batch.column("v"), dim=q_mat.shape[1])
+            if not valid.any():
                 continue
-            cell_vals = pdf["cell"].to_numpy()
+            cell_vals = batch.column("cell").to_numpy(zero_copy_only=False)
+            batch_ids = batch.column("id").to_numpy(zero_copy_only=False)
+            if not valid.all():
+                X, cell_vals, batch_ids = X[valid], cell_vals[valid], batch_ids[valid]
             for cell in np.unique(cell_vals):
                 qidx = c2q.get(int(cell))
                 if not qidx:
                     continue
-                sub = pdf[cell_vals == cell]
-                ids = sub["id"].to_numpy()
-                mat = np.asarray([np.asarray(v, dtype=np.float64) for v in sub["v"]])
+                in_cell = cell_vals == cell
+                ids, mat = batch_ids[in_cell], X[in_cell]
                 qs = q_mat[qidx]
                 if met == "cosine":
                     # eps=0 form — must mirror cosine_distance_col exactly
@@ -362,15 +369,16 @@ def _ivf_match_vectorized(
         qi = np.concatenate(acc_q)
         s = np.concatenate(acc_s)
         keep = grouped_topk_keep(qi, s, k)
-        yield pd.DataFrame(
+        yield pa.RecordBatch.from_pydict(
             {
                 "query_id": qarr[qi[keep]],
                 "match_id": np.concatenate(acc_i)[keep],
                 "score": s[keep],
-            }
+            },
+            schema=arrow_schema,
         )
 
-    cand = assigned.select("cell", "id", "v").mapInPandas(_partition_topk, out_schema)
+    cand = assigned.select("cell", "id", "v").mapInArrow(_partition_topk, out_schema)
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").asc_nulls_last(), F.col("match_id").asc()
     )

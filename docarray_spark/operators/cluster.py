@@ -24,14 +24,16 @@ standard k-means budget. Everything corpus-sized stays distributed.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from docarray_spark.functions.distance import sqeuclidean_distance_col
+from docarray_spark.functions.vectors import as_matrix, unit_rows
 
 
-# Above this k·d the broadcast-matrix pandas_udf argmin takes over; the
+# Above this k·d the broadcast-matrix arrow_udf argmin takes over; the
 # plan stays a zero-shuffle map either way. Two reasons to switch early:
 # (1) the literal fold is a higher-order AGGREGATE — CodegenFallback, so
 # every centroid distance is INTERPRETED per row (measured: IVF assignment
@@ -81,7 +83,7 @@ def _assign_cells_exact(
     keep_cols: tuple[str, ...] = (),
 ):
     """Oracle-range assignment (k·d ≤ ``LITERAL_ARGMIN_MAX_KD``) as an
-    Arrow-batched pandas_udf whose squared distances accumulate in
+    Arrow-batched ``arrow_udf`` whose squared distances accumulate in
     DIMENSION ORDER — the identical float64 operation sequence as
     :func:`_assign_cells_literal`'s fold (and an ANSI-SQL replay), so the
     values are bit-for-bit the fold's, without the fold's interpreted
@@ -92,38 +94,20 @@ def _assign_cells_exact(
 
     Fold-semantics edge cases mirrored exactly: centroids evaluated in the
     given order with strict ``<`` (first minimum wins → smallest cell id on
-    ties when centroids arrive cell-sorted); a NULL embedding or an
-    all-NaN distance row keeps the fold's initial ``(-1, inf)`` accumulator
-    → ``cell = -1``."""
+    ties when centroids arrive cell-sorted); a NULL embedding, a NULL
+    element, a length other than the centroids' (the fold's zip_with
+    NULL padding) or an all-NaN distance row keeps the fold's initial
+    ``(-1, inf)`` accumulator → ``cell = -1``."""
     order_cells = [c for c, _ in centroids]
     C = np.asarray([v for _, v in centroids], dtype=np.float64)  # (k, d)
     cells_arr = np.asarray(order_cells, dtype=np.int64)
     bc = base.sparkSession.sparkContext.broadcast((cells_arr, C))
 
-    @F.pandas_udf("int")
-    def _argmin_exact(emb: pd.Series) -> pd.Series:
+    @F.arrow_udf("int")
+    def _argmin_exact(emb: pa.Array) -> pa.Array:
         cells_, C_ = bc.value
-        n = len(emb)
-        if n == 0:
-            return pd.Series([], dtype="int32")
-        # rows whose embedding is NULL, length-mismatched vs the centroid
-        # dim, or not float-convertible keep the fold's padding semantics
-        # (zip_with null padding → NULL distance → accumulator stays
-        # (-1, inf) → cell -1) instead of a ragged np.asarray raising and
-        # killing the task (ADVICE r12 #3)
-        d_ = C_.shape[1]
-
-        def _row(e):
-            if e is None or len(e) != d_:
-                return None
-            try:
-                return np.asarray(e, dtype=np.float64)
-            except (TypeError, ValueError):
-                return None
-
-        rows = [_row(e) for e in emb]
-        null_mask = np.asarray([r is None for r in rows])
-        X = np.asarray([np.zeros(d_) if r is None else r for r in rows])
+        X, valid = as_matrix(emb, dim=C_.shape[1])
+        n = len(X)
         # dimension-order accumulation == the literal fold's Σ(x_j−c_j)²
         d2 = np.zeros((n, len(C_)), dtype=np.float64)
         for j in range(C_.shape[1]):
@@ -135,8 +119,8 @@ def _assign_cells_exact(
         idx = np.argmin(d2, axis=1)
         out = cells_[idx].astype("int64")
         out[~np.isfinite(d2[np.arange(n), idx])] = -1
-        out[null_mask] = -1
-        return pd.Series(out.astype("int32"))
+        out[~valid] = -1
+        return pa.array(out.astype(np.int32))
 
     return base.select(_argmin_exact("v").alias("cell"), "id", "v", *keep_cols)
 
@@ -147,11 +131,12 @@ def _assign_cells_broadcast(
     keep_cols: tuple[str, ...] = (),
 ):
     """Large-k·d assignment: the centroid matrix is BROADCAST once per
-    executor and the argmin runs as an Arrow-batched pandas_udf (one BLAS
-    ``X @ Cᵀ`` per batch) — same zero-shuffle map shape as the literal
-    fold, without the codegen blow-up. ``np.argmin`` keeps the FIRST
-    minimum, i.e. the smallest cell id on exact ties — the same tie-break
-    as the literal fold's strict ``<`` (centroids arrive cell-sorted).
+    executor and the argmin runs as an Arrow-batched ``arrow_udf`` (one
+    BLAS ``X @ Cᵀ`` per batch) — same zero-shuffle map shape as the
+    literal fold, without the codegen blow-up. ``np.argmin`` keeps the
+    FIRST minimum, i.e. the smallest cell id on exact ties — the same
+    tie-break as the literal fold's strict ``<`` (centroids arrive
+    cell-sorted). Rows :func:`as_matrix` rejects get cell -1.
 
     Note: BLAS computes ``‖c‖² − 2x·c`` (the ‖x‖² row-constant cancels in
     the argmin); last-ulp float drift vs the literal fold can flip
@@ -163,14 +148,12 @@ def _assign_cells_broadcast(
     Cn = (C * C).sum(axis=1)
     bc = base.sparkSession.sparkContext.broadcast((cells, C, Cn))
 
-    @F.pandas_udf("int")
-    def _argmin(emb: pd.Series) -> pd.Series:
+    @F.arrow_udf("int")
+    def _argmin(emb: pa.Array) -> pa.Array:
         cells_, C_, Cn_ = bc.value
-        if len(emb) == 0:
-            return pd.Series([], dtype="int32")
-        X = np.asarray([np.asarray(e, dtype=np.float64) for e in emb])
+        X, valid = as_matrix(emb, dim=C_.shape[1])
         d2 = Cn_[None, :] - 2.0 * (X @ C_.T)
-        return pd.Series(cells_[np.argmin(d2, axis=1)].astype("int32"))
+        return pa.array(np.where(valid, cells_[np.argmin(d2, axis=1)], -1).astype(np.int32))
 
     return base.select(_argmin("v").alias("cell"), "id", "v", *keep_cols)
 
@@ -199,9 +182,6 @@ def assign_cells(
     return _assign_cells_broadcast(base, centroids, keep_cols)
 
 
-_assign_cells = assign_cells  # internal alias used by kmeans below
-
-
 def assign_cells_multi(
     base: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -214,8 +194,10 @@ def assign_cells_multi(
     :func:`assign_cells`; ``_probe`` 0 = primary). ``centroid_dist`` is
     the COSINE distance to the PRIMARY centroid (null on secondary
     probes) — semantic_dedup's keep policy needs it exactly once per row.
+    A row :func:`as_matrix` rejects gets cell -1 on every probe and a
+    NULL ``centroid_dist``.
 
-    One zero-shuffle ``mapInPandas`` over the corpus emitting n_probe
+    One zero-shuffle ``mapInArrow`` over the corpus emitting n_probe
     rows per input row (the probe fan-out is the operator's documented
     ~p× cell-work cost, never a shuffle).
 
@@ -233,8 +215,7 @@ def assign_cells_multi(
     cells = np.asarray([c for c, _ in cents], dtype=np.int64)
     C = np.asarray([v for _, v in cents], dtype=np.float64)  # (k, d)
     Cn = (C * C).sum(axis=1)
-    cn = np.linalg.norm(C, axis=1)
-    Ccos = C / np.where(cn == 0.0, 1.0, cn)[:, None]
+    Ccos = unit_rows(C)
     exact = C.size <= LITERAL_ARGMIN_MAX_KD
     bc = base.sparkSession.sparkContext.broadcast((cells, C, Cn, Ccos))
     in_schema = base.select("id", "v").schema
@@ -246,12 +227,14 @@ def assign_cells_multi(
         T.StructField("centroid_dist", T.DoubleType()),
     ])
 
+    arrow_schema = to_arrow_schema(out_schema)
+
     def _gen(batches):
         cells_, C_, Cn_, Ccos_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            X = np.asarray([np.asarray(e, dtype=np.float64) for e in pdf["v"]])
+            X, valid = as_matrix(batch.column("v"), dim=C_.shape[1])
             if exact:
                 # dimension-order accumulation == the literal fold's /
                 # an oracle's Σ(x_j−c_j)² order; n×k temporaries per dim
@@ -264,8 +247,7 @@ def assign_cells_multi(
             # stable argsort: exact ties keep centroid (= cell-id) order,
             # matching assign_cells' first-minimum tie-break at _probe=0
             idx = np.argsort(d2, axis=1, kind="stable")[:, :p]
-            norms = np.linalg.norm(X, axis=1, keepdims=True)
-            Xn = X / np.where(norms == 0.0, 1.0, norms)
+            Xn = unit_rows(X)
             # primary cosine distance in the SAME dot form as the
             # single-probe path's per-cell ``Xn @ cv`` (ADVICE r10): an
             # elementwise-multiply + pairwise sum can differ by half an
@@ -279,23 +261,26 @@ def assign_cells_multi(
                 cd[m] = 1.0 - (Xn[m] @ Ccos_[c])
             if round_to is not None:
                 cd = np.round(cd, round_to) + 0.0  # -0.0 -> 0.0 (hash class)
-            n = len(pdf)
-            yield pd.DataFrame({
-                "cell": cells_[idx.ravel()].astype("int32"),
-                "_probe": np.tile(np.arange(p, dtype=np.int32), n),
-                "id": pdf["id"].to_numpy().repeat(p),
-                "v": pdf["v"].to_numpy().repeat(p),
-                "centroid_dist": np.where(
-                    np.tile(np.arange(p), n) == 0, cd.repeat(p), np.nan
-                ),
-            })
+            n = len(X)
+            fan = pa.array(np.arange(n).repeat(p))
+            primary = np.tile(np.arange(p), n) == 0
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.where(valid[:, None], cells_[idx], -1).ravel().astype(np.int32)),
+                    pa.array(np.tile(np.arange(p, dtype=np.int32), n)),
+                    batch.column("id").take(fan),
+                    batch.column("v").take(fan),
+                    pa.array(cd.repeat(p), mask=~(primary & valid.repeat(p))),
+                ],
+                schema=arrow_schema,
+            )
 
-    return base.select("id", "v").mapInPandas(_gen, out_schema)
+    return base.select("id", "v").mapInArrow(_gen, out_schema)
 
 
 def _lloyd_partials(base: DataFrame, centroids: list[tuple[int, list[float]]]):
     """One fused Lloyd's step for NON-final iterations: argmin assignment
-    **and** per-cell partial sums/counts in a single ``mapInPandas`` pass
+    **and** per-cell partial sums/counts in a single ``mapInArrow`` pass
     (one BLAS matmul + ``np.add.at`` per Arrow batch). Emits ≤ k·d rows per
     partition ``(cell, dim, s, n)``; the caller reduces them with one tiny
     map-side-combinable ``groupBy(cell, dim)`` — so the exchange ships
@@ -304,7 +289,8 @@ def _lloyd_partials(base: DataFrame, centroids: list[tuple[int, list[float]]]):
     accumulate in row order, the same order Spark's own partial-avg hash
     agg uses, and the caller's ``round_to`` rounding absorbs merge-order
     ulps (the reason non-final iterations may run off the SQL plan at
-    all — see :func:`kmeans`)."""
+    all — see :func:`kmeans`). Rows :func:`as_matrix` rejects count in
+    no cell."""
     cents = sorted(centroids)
     cells = np.asarray([c for c, _ in cents], dtype=np.int64)
     C = np.asarray([v for _, v in cents], dtype=np.float64)  # (k, d)
@@ -316,25 +302,27 @@ def _lloyd_partials(base: DataFrame, centroids: list[tuple[int, list[float]]]):
         cells_, C_, Cn_ = bc.value
         sums = np.zeros((k, d), dtype=np.float64)
         cnt = np.zeros(k, dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            X, valid = as_matrix(batch.column("v"), dim=d)
+            if not valid.any():
                 continue
-            X = np.asarray([np.asarray(e, dtype=np.float64) for e in pdf["v"]])
+            X = X[valid]
             a = np.argmin(Cn_[None, :] - 2.0 * (X @ C_.T), axis=1)
             np.add.at(sums, a, X)
             cnt += np.bincount(a, minlength=k)
         hit = np.nonzero(cnt)[0]
         if len(hit):
-            yield pd.DataFrame(
-                {
-                    "cell": np.repeat(cells_[hit], d),
-                    "dim": np.tile(np.arange(d), len(hit)),
-                    "s": sums[hit].ravel(),
-                    "n": np.repeat(cnt[hit], d),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.repeat(cells_[hit], d).astype(np.int32)),
+                    pa.array(np.tile(np.arange(d, dtype=np.int32), len(hit))),
+                    pa.array(sums[hit].ravel()),
+                    pa.array(np.repeat(cnt[hit], d)),
+                ],
+                names=["cell", "dim", "s", "n"],
             )
 
-    return base.select("v").mapInPandas(_part, "cell int, dim int, s double, n long")
+    return base.select("v").mapInArrow(_part, "cell int, dim int, s double, n long")
 
 
 def kmeans(
@@ -421,7 +409,7 @@ def kmeans(
         # empty corpus: zero-centroid assignment is unrepresentable in the
         # literal fold (empty argmin) — return the empty tables directly
         return cent_df, base.select(F.lit(0).alias("cell"), "id").limit(0)
-    assigned = _assign_cells(base, cents).select("cell", "id")
+    assigned = assign_cells(base, cents).select("cell", "id")
     return cent_df, assigned
 
 
@@ -464,29 +452,29 @@ def diversity_sample(
     to the selected set (ties → smaller md5).
 
     One hash exchange on the group key, then numpy O(k·n·d) per group
-    inside ``applyInPandas`` (Arrow batches) — the same per-group
-    bounded-state contract as ``pack.first_fit_pack``. Iterative greedy
-    selection has no reasonable SQL form, so this operator is pytest-gated
-    rather than oracle-gated (the determinism makes results reproducible
-    across runs/partitionings regardless)."""
+    inside ``applyInArrow`` — the same per-group bounded-state contract as
+    ``pack.first_fit_pack``. Iterative greedy selection has no reasonable
+    SQL form, so this operator is pytest-gated rather than oracle-gated
+    (the determinism makes results reproducible across
+    runs/partitionings regardless). Rows whose embedding
+    :func:`as_matrix` rejects are never picked."""
     import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    out_fields = df.select(id_col, group_col).schema.fields
 
     from pyspark.sql import types as T
 
+    out_fields = df.select(id_col, group_col).schema.fields
     schema = T.StructType(list(out_fields) + [T.StructField("pick_order", T.IntegerType())])
+    arrow_schema = to_arrow_schema(schema)
 
-    def _select(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        ids = pdf[id_col].astype(str).to_numpy()
+    def _select(tbl):
+        mat, valid = as_matrix(tbl.column(emb_col))
+        tbl = tbl.filter(pa.array(valid))
+        mat, n = mat[valid], tbl.num_rows
+        if not n:
+            return arrow_schema.empty_table()
         order_key = np.array(
-            [hashlib.md5(x.encode()).hexdigest() for x in ids]
+            [hashlib.md5(str(x).encode()).hexdigest() for x in tbl.column(id_col).to_pylist()]
         )
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[emb_col]])
         kk = min(k, n)
         seed = int(np.argmin(order_key))
         chosen = [seed]
@@ -498,8 +486,14 @@ def diversity_sample(
             chosen.append(far)
             d2 = np.minimum(d2, ((mat - mat[far]) ** 2).sum(axis=1))
             d2[far] = -np.inf
-        sel = pdf.iloc[chosen][[id_col, group_col]].reset_index(drop=True)
-        sel["pick_order"] = range(len(chosen))
-        return sel
+        picked = pa.array(chosen)
+        return pa.Table.from_arrays(
+            [
+                tbl.column(id_col).take(picked),
+                tbl.column(group_col).take(picked),
+                pa.array(np.arange(len(chosen), dtype=np.int32)),
+            ],
+            schema=arrow_schema,
+        )
 
-    return df.groupBy(group_col).applyInPandas(_select, schema)
+    return df.groupBy(group_col).applyInArrow(_select, schema)

@@ -185,7 +185,9 @@ def mmr_rerank(
     Scale shape: this is a post-top-k rerank — ``candidates`` is
     queries × fetch_k rows, so the embedding join broadcasts the
     candidate side into the corpus scan and the greedy loop runs on tiny
-    per-query pandas groups (``applyInPandas``), never corpus-sized.
+    per-query Arrow groups (``applyInArrow``), never corpus-sized.
+    A candidate whose embedding is NULL, holds a NULL element or differs
+    in length from the group's first counts as missing.
 
     Determinism contract (SQL-oracle-able at fixed k, unlike open-ended
     greedy selection): ``rel`` and every pairwise similarity are rounded
@@ -204,8 +206,11 @@ def mmr_rerank(
     of silently returning a list the best candidate (or an entire query)
     may have vanished from; ``'drop'`` makes the exclusion explicit."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from docarray_spark.functions.vectors import as_matrix, unit_rows
 
     if not 0.0 <= lam <= 1.0:
         raise ValueError(f"lam must be in [0, 1], got {lam}")
@@ -246,11 +251,14 @@ def mmr_rerank(
         T.StructField("rank", T.IntegerType()),
     ])
 
-    def _mmr(pdf: pd.DataFrame) -> pd.DataFrame:
+    arrow_schema = to_arrow_schema(out_schema)
+
+    def _mmr(tbl):
+        X, valid = as_matrix(tbl.column("_v"))
+        pdf = tbl.drop_columns(["_v"]).to_pandas()  # scalar columns only
         nq = int(pdf["_nq"].iloc[0])
         qid = pdf["_qid"].iloc[0]
-        pdf = pdf[pdf["_v"].notna()]  # drop the sentinel (and nothing else
-        # — the inner join can't produce a null embedding for a real row)
+        pdf = pdf.assign(_row=np.arange(len(pdf)))[valid]  # drops the sentinel
         if on_missing == "error" and len(pdf) != nq:
             raise ValueError(
                 f"mmr_rerank: query {qid!r} has {nq} candidates but only "
@@ -259,18 +267,11 @@ def mmr_rerank(
                 "reranked list; fix the id spaces or pass on_missing='drop'"
             )
         if len(pdf) == 0:
-            return pd.DataFrame({
-                "_qid": pd.Series([], dtype=object),
-                "_mid": pd.Series([], dtype=object),
-                "score": np.array([], dtype=np.float64),
-                "rank": np.array([], dtype=np.int32),
-            })
+            return arrow_schema.empty_table()
         pdf = pdf.sort_values("_mid", ignore_index=True)  # id tie-break:
         # np.argmax returns the FIRST max, which is the smallest id here
         rel = pdf["_rel"].to_numpy(dtype=np.float64)
-        X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-        norms = np.linalg.norm(X, axis=1, keepdims=True)
-        Xn = X / np.where(norms == 0.0, 1.0, norms)
+        Xn = unit_rows(X[pdf["_row"].to_numpy()])
         n = len(pdf)
         picked: list[int] = []
         scores: list[float] = []
@@ -291,16 +292,17 @@ def mmr_rerank(
             avail[i] = False
             sims = np.round(Xn @ Xn[i], round_to)
             np.maximum(maxsim, sims, out=maxsim)
-        return pd.DataFrame({
-            "_qid": pdf["_qid"].iloc[picked].to_numpy(),
-            "_mid": pdf["_mid"].iloc[picked].to_numpy(),
+        rows = pa.array(pdf["_row"].to_numpy()[picked])
+        return pa.Table.from_arrays([
+            tbl.column("_qid").take(rows),
+            tbl.column("_mid").take(rows),
             # + 0.0: normalize IEEE -0.0 (an exactly-cancelling MMR value
             # would str-hash differently than the oracle's 0.0)
-            "score": np.round(np.asarray(scores), round_to) + 0.0,
-            "rank": np.arange(1, len(picked) + 1, dtype=np.int32),
-        })
+            pa.array(np.round(np.asarray(scores), round_to) + 0.0),
+            pa.array(np.arange(1, len(picked) + 1, dtype=np.int32)),
+        ], names=arrow_schema.names).cast(arrow_schema)
 
-    out = joined.groupBy("_qid").applyInPandas(_mmr, out_schema)
+    out = joined.groupBy("_qid").applyInArrow(_mmr, out_schema)
     return out.select(
         F.col("_qid").alias(query_col),
         F.col("_mid").alias(id_col),

@@ -32,14 +32,37 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from docarray_spark.functions.hnsw import HNSWIndex
+from docarray_spark.functions.vectors import as_matrix, unit_rows
 
 _MAX_QUERY_ROWS = 65536
 _METRICS = ("sqeuclidean", "euclidean", "cosine")
+
+
+def _partition_vectors(batches, id_col, emb_col, dim, cosine):
+    """``(keys, matrix)`` of every row of a partition's Arrow batches whose
+    embedding :func:`as_matrix` accepts (``dim`` long, or as long as the
+    first such row when ``dim`` is None); unit rows for cosine. ``(None,
+    None)`` when there is none."""
+    keys: list = []
+    mats: list[np.ndarray] = []
+    for batch in batches:
+        X, valid = as_matrix(batch.column(emb_col), dim=dim)
+        if not valid.any():
+            continue
+        dim = X.shape[1]
+        keys += list(batch.column(id_col).to_numpy(zero_copy_only=False)[valid])
+        mats.append(X[valid])
+    if not keys:
+        return None, None
+    mat = np.vstack(mats)
+    return keys, unit_rows(mat) if cosine else mat
 
 
 def hnsw_match(
@@ -90,8 +113,7 @@ def hnsw_match(
     qids = [r[0] for r in qrows]
     qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
     if metric == "cosine":
-        qnorm = np.linalg.norm(qmat, axis=1, keepdims=True)
-        qmat = qmat / np.where(qnorm == 0.0, 1.0, qnorm)
+        qmat = unit_rows(qmat)
 
     spark = corpus.sparkSession
     bc = spark.sparkContext.broadcast((qids, qmat))
@@ -106,26 +128,15 @@ def hnsw_match(
     )
     mm, efc, efs, met = M, ef_construction, ef, metric
 
-    def _partition_search(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    arrow_schema = to_arrow_schema(out_schema)
+
+    def _partition_search(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         q_ids, q_mat = bc.value
-        keys: list = []
-        mats: list[np.ndarray] = []
-        for pdf in batches:
-            mask = pdf[emb_col].notna().to_numpy()
-            if not mask.any():
-                continue
-            keys += list(pdf[corpus_id_col].to_numpy()[mask])
-            mats.append(
-                np.asarray(
-                    [np.asarray(e, dtype=np.float64) for e in pdf[emb_col][mask]]
-                )
-            )
-        if not keys:
+        keys, mat = _partition_vectors(
+            batches, corpus_id_col, emb_col, q_mat.shape[1], met == "cosine"
+        )
+        if keys is None:
             return
-        mat = np.vstack(mats)
-        if met == "cosine":
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            mat = mat / np.where(norms == 0.0, 1.0, norms)
         index = HNSWIndex(dim=mat.shape[1], M=mm, ef_construction=efc)
         index.add_batch(keys, mat)
         rows_q, rows_m, rows_s = [], [], []
@@ -136,11 +147,12 @@ def hnsw_match(
                 # unit vectors: |a-b|²/2 = 1 - cos, the exact cosine distance
                 rows_s.append(d / 2.0 if met == "cosine" else d)
         if rows_q:
-            yield pd.DataFrame(
-                {"query_id": rows_q, "match_id": rows_m, "score": rows_s}
+            yield pa.RecordBatch.from_pydict(
+                {"query_id": rows_q, "match_id": rows_m, "score": rows_s},
+                schema=arrow_schema,
             )
 
-    cand = corpus.select(corpus_id_col, emb_col).mapInPandas(
+    cand = corpus.select(corpus_id_col, emb_col).mapInArrow(
         _partition_search, out_schema
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -182,37 +194,24 @@ def hnsw_build_store(
     mm, efc, met = M, ef_construction, metric
     id_type = corpus.schema[corpus_id_col].dataType.simpleString()
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pickle
 
         from pyspark import TaskContext
 
-        keys: list = []
-        mats: list[np.ndarray] = []
-        for pdf in batches:
-            mask = pdf[emb_col].notna().to_numpy()
-            if not mask.any():
-                continue
-            keys += list(pdf[corpus_id_col].to_numpy()[mask])
-            mats.append(
-                np.asarray(
-                    [np.asarray(e, dtype=np.float64) for e in pdf[emb_col][mask]]
-                )
-            )
-        if not keys:
+        keys, mat = _partition_vectors(
+            batches, corpus_id_col, emb_col, None, met == "cosine"
+        )
+        if keys is None:
             return
-        mat = np.vstack(mats)
-        if met == "cosine":
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            mat = mat / np.where(norms == 0.0, 1.0, norms)
         index = HNSWIndex(dim=mat.shape[1], M=mm, ef_construction=efc)
         index.add_batch(keys, mat)
         # pickling trims growth slack, drops derived norms, and rounds the
         # vectors to float32 (HNSWIndex.__getstate__) — the blob is ~half
         # the float64 in-memory footprint
-        yield pd.DataFrame(
+        yield pa.RecordBatch.from_pydict(
             {
-                "part_id": [TaskContext.get().partitionId()],
+                "part_id": pa.array([TaskContext.get().partitionId()], pa.int32()),
                 "metric": [met],
                 "id_type": [id_type],
                 "n": [index.n],
@@ -222,7 +221,7 @@ def hnsw_build_store(
 
     (
         corpus.select(corpus_id_col, emb_col)
-        .mapInPandas(
+        .mapInArrow(
             _build,
             "part_id int, metric string, id_type string, n long, blob binary",
         )
@@ -289,8 +288,7 @@ def hnsw_match_stored(
     qids = [r[0] for r in qrows]
     qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
     if metric == "cosine":
-        qnorm = np.linalg.norm(qmat, axis=1, keepdims=True)
-        qmat = qmat / np.where(qnorm == 0.0, 1.0, qnorm)
+        qmat = unit_rows(qmat)
     allow, sel = None, 1.0
     if allowed_ids is not None:
         acol = allowed_ids.columns[0]

@@ -55,10 +55,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from docarray_spark.functions.localexec import local_table
+from docarray_spark.functions.vectors import as_matrix, unit_rows
 
 from docarray_spark.operators.hnsw import _METRICS
 from docarray_spark.sources.registry import _exists as _dir_exists
@@ -117,6 +119,10 @@ def _overwrite_segments(
 
 
 _SEGMENT_SCHEMA = "_bucket int, metric string, id_type string, n long, blob binary"
+_SEGMENT_ARROW = pa.schema([
+    ("_bucket", pa.int32()), ("metric", pa.string()), ("id_type", pa.string()),
+    ("n", pa.int64()), ("blob", pa.binary()),
+])
 
 
 def hnsw_refresh(
@@ -165,33 +171,27 @@ def hnsw_refresh(
     id_type = df.schema[id_col].dataType.simpleString()
     mm, efc, met, idc, embc = M, ef_construction, metric, id_col, emb_col
 
-    def _prep(pdf: pd.DataFrame):
-        pdf = pdf[pdf[embc].notna()]
-        if not len(pdf):
+    def _prep(tbl: pa.Table):
+        # rows whose embedding as_matrix rejects are not indexed
+        mat, valid = as_matrix(tbl.column(embc))
+        if not valid.any():
             return None, None
-        keys = list(pdf[idc].to_numpy())
-        mat = np.asarray([np.asarray(e, dtype=np.float64) for e in pdf[embc]])
-        if met == "cosine":
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            mat = mat / np.where(norms == 0.0, 1.0, norms)
-        return keys, mat
+        keys = list(tbl.column(idc).to_numpy()[valid])
+        mat = mat[valid]
+        return keys, unit_rows(mat) if met == "cosine" else mat
 
-    def _segment_row(bucket: int, index) -> pd.DataFrame:
+    def _segment_row(tbl: pa.Table, index) -> pa.Table:
         import pickle
 
-        return pd.DataFrame(
+        return pa.table(
             {
-                "_bucket": [int(bucket)],
+                "_bucket": [tbl.column("_bucket")[0].as_py()],
                 "metric": [met],
                 "id_type": [id_type],
                 "n": [index.n],
                 "blob": [pickle.dumps(index, protocol=5)],
-            }
-        )
-
-    def _empty() -> pd.DataFrame:
-        return pd.DataFrame(
-            {"_bucket": [], "metric": [], "id_type": [], "n": [], "blob": []}
+            },
+            schema=_SEGMENT_ARROW,
         )
 
     def _fit(keys, mat):
@@ -201,27 +201,29 @@ def hnsw_refresh(
         index.add_batch(keys, mat)
         return index
 
-    def _build_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys, mat = _prep(pdf)
+    # unannotated: applyInArrow infers its mode from type hints
+    def _build_one(tbl):
+        keys, mat = _prep(tbl)
         if keys is None:
-            return _empty()
-        return _segment_row(pdf["_bucket"].iloc[0], _fit(keys, mat))
+            return _SEGMENT_ARROW.empty_table()
+        return _segment_row(tbl, _fit(keys, mat))
 
-    def _insert_one(store_pdf: pd.DataFrame, seg_pdf: pd.DataFrame) -> pd.DataFrame:
+    def _insert_one(store_tbl, seg_tbl):
         import pickle
 
-        keys, mat = _prep(store_pdf)
+        keys, mat = _prep(store_tbl)
         if keys is None:
-            return _empty()  # bucket emptied → its segment stays deleted
-        if not len(seg_pdf):
-            return _segment_row(store_pdf["_bucket"].iloc[0], _fit(keys, mat))
-        index = pickle.loads(seg_pdf["blob"].iloc[0])
+            # bucket emptied → its segment stays deleted
+            return _SEGMENT_ARROW.empty_table()
+        if not seg_tbl.num_rows:
+            return _segment_row(store_tbl, _fit(keys, mat))
+        index = pickle.loads(seg_tbl.column("blob")[0].as_py())
         store_idx = pd.Index(keys)
         graph_idx = pd.Index(index.keys)
         if not (store_idx.is_unique and graph_idx.is_unique):
             # ids are unique by the store contract; a duplicate means the
             # bucket is in an unexpected state — rebuild is always correct
-            return _segment_row(store_pdf["_bucket"].iloc[0], _fit(keys, mat))
+            return _segment_row(store_tbl, _fit(keys, mat))
         # deletes → unlink needed → rebuild (graph key absent from store)
         rebuild = bool((store_idx.get_indexer(graph_idx) < 0).any())
         pos = graph_idx.get_indexer(store_idx)  # -1 = new row to insert
@@ -243,11 +245,11 @@ def hnsw_refresh(
             else:
                 rebuild = bool((m32[sel] != old32[pos[sel]]).any())
         if rebuild:
-            return _segment_row(store_pdf["_bucket"].iloc[0], _fit(keys, mat))
+            return _segment_row(store_tbl, _fit(keys, mat))
         fresh = sorted((int(j) for j in np.nonzero(~sel)[0]),
                        key=lambda j: keys[j])
         index.add_batch([keys[j] for j in fresh], mat[fresh])
-        return _segment_row(store_pdf["_bucket"].iloc[0], index)
+        return _segment_row(store_tbl, index)
 
     base = df.select("_bucket", id_col, emb_col)
     old = None
@@ -264,11 +266,11 @@ def hnsw_refresh(
             # index" (ADVICE r7 #3)
             old = None
     if old is not None:
-        segments = base.groupBy("_bucket").cogroup(old.groupBy("_bucket")).applyInPandas(
+        segments = base.groupBy("_bucket").cogroup(old.groupBy("_bucket")).applyInArrow(
             _insert_one, _SEGMENT_SCHEMA
         )
     else:
-        segments = base.groupBy("_bucket").applyInPandas(_build_one, _SEGMENT_SCHEMA)
+        segments = base.groupBy("_bucket").applyInArrow(_build_one, _SEGMENT_SCHEMA)
     emptied = _overwrite_segments(spark, segments, index_path, buckets)
     return {
         "rebuilt_buckets": "all" if buckets is None else len(set(buckets)),

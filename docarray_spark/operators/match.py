@@ -7,9 +7,11 @@ whose batched mode is a running per-query top-k merge
 (``math/helper.py:69-91``). This operator is the same two-phase pattern,
 distributed:
 
-1. **map phase** (``mapInPandas``, Arrow batches): the bounded query matrix
+1. **map phase** (``mapInArrow``, Arrow batches): the bounded query matrix
    is broadcast to every corpus partition; each partition streams its rows
-   through the numpy distance kernel keeping only a running top-k per query
+   through the numpy distance kernel (``functions.vectors.as_matrix`` turns
+   the embedding column into the matrix; NULL, NULL-element and
+   wrong-dimension rows are not candidates) keeping only a running top-k per query
    (plus the partition-wide min/max per query when normalization is on).
    The prune keeps every candidate whose score is ≤ the k-th score, so a
    tie at the k-th slot survives whole and the reduce phase's ``match_id``
@@ -34,16 +36,18 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from docarray_spark.functions.distance import (
     grouped_topk_keep,
     resolve_metric,
     topk_keep,
 )
+from docarray_spark.functions.vectors import as_matrix, list_array
 from docarray_spark.queryset.compiler import compile_filter
 
 _MINMAX_EPS = 1e-7  # reference math/helper.py:6-37
@@ -119,7 +123,9 @@ def match(
         ]
     )
 
-    def _partition_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    arrow_schema = to_arrow_schema(out_schema)
+
+    def _partition_topk(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         q_ids, q_mat = bc.value
         nq = len(q_ids)
         acc_q: list[np.ndarray] = []  # flat candidates: query index, score, id
@@ -127,13 +133,13 @@ def match(
         acc_i: list[np.ndarray] = []
         pmin = np.full(nq, np.inf)
         pmax = np.full(nq, -np.inf)
-        for pdf in batches:
-            emb = pdf[on]
-            mask = emb.notna().to_numpy()
-            if not mask.any():
+        for batch in batches:
+            mat, valid = as_matrix(batch.column(on), dim=q_mat.shape[1])
+            if not valid.any():
                 continue
-            ids = pdf[corpus_id_col].to_numpy()[mask]
-            mat = np.asarray([np.asarray(e, dtype=np.float64) for e in emb[mask]])
+            ids = batch.column(corpus_id_col).to_numpy(zero_copy_only=False)
+            if not valid.all():
+                mat, ids = mat[valid], ids[valid]
             d = kernel(q_mat, mat, eps=eps)  # (nq, b)
             # normalization bounds come from the RAW distance row, self
             # included — the reference normalizes before the mixin drops
@@ -158,17 +164,18 @@ def match(
         sel = grouped_topk_keep(qi, scores, k)
         sel = sel[~np.isinf(scores[sel])]
         qi = qi[sel]
-        yield pd.DataFrame(
+        yield pa.RecordBatch.from_pydict(
             {
                 "query_id": np.asarray(q_ids)[qi],
                 "match_id": mids[sel],
                 "score": scores[sel],
                 "pmin": pmin[qi],
                 "pmax": pmax[qi],
-            }
+            },
+            schema=arrow_schema,
         )
 
-    cand = corpus.select(corpus_id_col, on).mapInPandas(_partition_topk, out_schema)
+    cand = corpus.select(corpus_id_col, on).mapInArrow(_partition_topk, out_schema)
 
     by_query = Window.partitionBy("query_id")
     rank_w = by_query.orderBy(F.col("score").asc(), F.col("match_id").asc())
@@ -247,7 +254,7 @@ def knn_graph(
 
     Shuffle-based block-nested loop: rows are hashed into ``n_blocks``
     blocks; each row is exploded to every (query_block, corpus_block) task
-    key it participates in (2·B-1 keys), one ``applyInPandas`` task per
+    key it participates in (2·B-1 keys), one ``applyInArrow`` task per
     block pair computes the partial top-k of its query block against its
     corpus block with the numpy kernel, and one window merge per query
     yields the global top-k. The plan is: ONE corpus scan → explode →
@@ -300,27 +307,29 @@ def knn_graph(
         ]
     )
 
-    def _block_pair_topk(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        qb, cb = key
-        qs = pdf[pdf["_blk"] == qb]
-        cs = pdf[pdf["_blk"] == cb]
-        if qs.empty or cs.empty:
-            return pd.DataFrame({"query_id": [], "match_id": [], "score": []})
-        q_ids = qs["_id"].to_numpy()
-        c_ids = cs["_id"].to_numpy()
-        q_mat = np.asarray([np.asarray(v, dtype=np.float64) for v in qs["_v"]])
-        c_mat = np.asarray([np.asarray(v, dtype=np.float64) for v in cs["_v"]])
-        d = kernel(q_mat, c_mat, eps=eps)
+    arrow_schema = to_arrow_schema(out_schema)
+
+    def _block_pair_topk(key, tbl):  # unannotated: applyInArrow misreads hints
+        qb, cb = (s.as_py() for s in key)
+        blk = tbl.column("_blk").to_numpy()
+        mat, valid = as_matrix(tbl.column("_v"))
+        qs, cs = valid & (blk == qb), valid & (blk == cb)
+        if not qs.any() or not cs.any():
+            return arrow_schema.empty_table()
+        ids = tbl.column("_id").to_numpy()
+        q_ids, c_ids = ids[qs], ids[cs]
+        d = kernel(mat[qs], mat[cs], eps=eps)
         if exclude_self:
             d = np.where(q_ids[:, None] == c_ids[None, :], np.inf, d)
         qi, ci = topk_keep(d, k)
         keep = ~np.isinf(d[qi, ci])
         qi, ci = qi[keep], ci[keep]
-        return pd.DataFrame(
-            {"query_id": q_ids[qi], "match_id": c_ids[ci], "score": d[qi, ci]}
+        return pa.table(
+            {"query_id": q_ids[qi], "match_id": c_ids[ci], "score": d[qi, ci]},
+            schema=arrow_schema,
         )
 
-    cand = tasks.groupBy("_qb", "_cb").applyInPandas(_block_pair_topk, out_schema)
+    cand = tasks.groupBy("_qb", "_cb").applyInArrow(_block_pair_topk, out_schema)
     w = Window.partitionBy("query_id").orderBy(F.col("score").asc(), F.col("match_id").asc())
     out = cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
     score = F.round("score", round_scores) if round_scores is not None else F.col("score")
@@ -402,15 +411,9 @@ def find_by_vectors(
     # pandas-of-numpy-rows form still boxed every row into an object
     # column (only 1.5× over the r7 row loop at 100k×128, NOTES r8); the
     # buffer-backed table is pure memcpy on the driver.
-    import pyarrow as pa
-
-    n, d = vecs.shape
-    offsets = pa.array(np.arange(0, (n + 1) * d, d, dtype=np.int32))
     qtbl = pa.table({
-        "id": pa.array(np.arange(n, dtype=np.int64)),
-        "embedding": pa.ListArray.from_arrays(
-            offsets, pa.array(np.ascontiguousarray(vecs).ravel(), type=pa.float64())
-        ),
+        "id": pa.array(np.arange(len(vecs), dtype=np.int64)),
+        "embedding": list_array(vecs),
     })
     qdf = spark.createDataFrame(qtbl, schema="id bigint, embedding array<double>")
     if backend == "exact":

@@ -38,18 +38,43 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from docarray_spark.functions.distance import grouped_topk_keep, topk_keep
+from docarray_spark.functions.vectors import as_matrix
 
 _MAX_TRAIN_SAMPLE = 262144  # driver-collect budget (same stance as match())
 _MAX_QUERY_ROWS = 65536
 
 
-def _as_matrix(series: pd.Series) -> np.ndarray:
-    return np.asarray([np.asarray(e, dtype=np.float64) for e in series])
+def _encode_map(corpus, id_col, emb_col, keep_cols, dim, bc, to_codes):
+    """The map-only Arrow encode pass shared by :func:`pq_encode` and
+    :func:`sq_encode`: → (id[, keep_cols...], codes BINARY) with
+    ``to_codes(bc.value, X)`` the (rows × bytes) uint8 codes of the
+    float64 matrix ``X``. Rows whose embedding is NULL, holds a NULL
+    element or is not ``dim`` long are not encoded."""
+    keep = keep_cols or []
+    fields = [corpus.schema[c] for c in (id_col, *keep)]
+    out_schema = T.StructType(fields + [T.StructField("codes", T.BinaryType())])
+    arrow_schema = to_arrow_schema(out_schema)
+
+    def _encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        quantizer = bc.value
+        for batch in batches:
+            X, valid = as_matrix(batch.column(emb_col), dim=dim)
+            if not valid.any():
+                continue
+            codes = to_codes(quantizer, X[valid])
+            mask = pa.array(valid)
+            cols = [batch.column(c).filter(mask) for c in (id_col, *keep)]
+            cols.append(pa.array([c.tobytes() for c in codes], pa.binary()))
+            yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+
+    return corpus.select(id_col, emb_col, *keep).mapInArrow(_encode, out_schema)
 
 
 def _subspace_bounds(dim: int, m: int) -> list[tuple[int, int]]:
@@ -161,39 +186,24 @@ def pq_encode(
     m = len(codebooks)
     dim = sum(len(b[0]) for b in codebooks)
     bounds = _subspace_bounds(dim, m)
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast(
+    bc = corpus.sparkSession.sparkContext.broadcast(
         [np.asarray(b, dtype=np.float64) for b in codebooks]
     )
-    keep = keep_cols or []
-    fields = [corpus.schema[id_col]] + [corpus.schema[c] for c in keep]
-    out_schema = T.StructType(fields + [T.StructField("codes", T.BinaryType())])
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        books = bc.value
-        for pdf in batches:
-            mask = pdf[emb_col].notna().to_numpy()
-            if not mask.any():
-                continue
-            sub_pdf = pdf[mask]
-            mat = _as_matrix(sub_pdf[emb_col])
-            codes = np.empty((len(mat), m), dtype=np.uint8)
-            for j, (lo, hi) in enumerate(bounds):
-                sub = mat[:, lo:hi]
-                cent = books[j]
-                d = (
-                    (sub**2).sum(1)[:, None]
-                    - 2.0 * sub @ cent.T
-                    + (cent**2).sum(1)[None, :]
-                )
-                codes[:, j] = d.argmin(1)
-            out = {id_col: sub_pdf[id_col].to_numpy()}
-            for c in keep:
-                out[c] = sub_pdf[c].to_numpy()
-            out["codes"] = [c.tobytes() for c in codes]
-            yield pd.DataFrame(out)
+    def _codes(books, mat):
+        codes = np.empty((len(mat), m), dtype=np.uint8)
+        for j, (lo, hi) in enumerate(bounds):
+            sub = mat[:, lo:hi]
+            cent = books[j]
+            d = (
+                (sub**2).sum(1)[:, None]
+                - 2.0 * sub @ cent.T
+                + (cent**2).sum(1)[None, :]
+            )
+            codes[:, j] = d.argmin(1)
+        return codes
 
-    return corpus.select(id_col, emb_col, *keep).mapInPandas(_encode, out_schema)
+    return _encode_map(corpus, id_col, emb_col, keep_cols, dim, bc, _codes)
 
 
 def _query_luts(
@@ -625,25 +635,24 @@ def sq_train(
     per partition) reduced on the driver — min/max are order-independent,
     so the result is deterministic under any partitioning, and the driver
     state is ``partitions × 2d`` floats, never rows."""
-    import pandas as pd  # noqa: F811 (worker-side import parity)
-
-    def _partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mn = mx = None
-        for pdf in batches:
-            col = pdf[emb_col]
-            mask = col.notna().to_numpy()
-            if not mask.any():
+    def _partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        mn = mx = dim = None
+        for batch in batches:
+            mat, valid = as_matrix(batch.column(emb_col), dim=dim)
+            if not valid.any():
                 continue
-            mat = np.asarray([np.asarray(e, dtype=np.float64) for e in col[mask]])
+            mat, dim = mat[valid], mat.shape[1]
             bmn, bmx = mat.min(axis=0), mat.max(axis=0)
             mn = bmn if mn is None else np.minimum(mn, bmn)
             mx = bmx if mx is None else np.maximum(mx, bmx)
         if mn is not None:
-            yield pd.DataFrame({"mins": [list(mn)], "maxs": [list(mx)]})
+            yield pa.RecordBatch.from_pydict(
+                {"mins": [mn.tolist()], "maxs": [mx.tolist()]}
+            )
 
     parts = (
         corpus.select(emb_col)
-        .mapInPandas(_partial, "mins array<double>, maxs array<double>")
+        .mapInArrow(_partial, "mins array<double>, maxs array<double>")
         .collect()
     )
     if not parts:
@@ -666,30 +675,15 @@ def sq_encode(
     mins = np.asarray(bounds[0], dtype=np.float64)
     maxs = np.asarray(bounds[1], dtype=np.float64)
     span = np.where(maxs > mins, maxs - mins, 1.0)
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast((mins, span))
-    keep = keep_cols or []
-    fields = [corpus.schema[id_col]] + [corpus.schema[c] for c in keep]
-    out_schema = T.StructType(fields + [T.StructField("codes", T.BinaryType())])
+    bc = corpus.sparkSession.sparkContext.broadcast((mins, span))
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b_mins, b_span = bc.value
-        for pdf in batches:
-            mask = pdf[emb_col].notna().to_numpy()
-            if not mask.any():
-                continue
-            sub = pdf[mask]
-            mat = np.asarray([np.asarray(e, dtype=np.float64) for e in sub[emb_col]])
-            codes = np.clip(
-                np.rint((mat - b_mins) / b_span * 255.0), 0, 255
-            ).astype(np.uint8)
-            out = {id_col: sub[id_col].to_numpy()}
-            for c in keep:
-                out[c] = sub[c].to_numpy()
-            out["codes"] = [c.tobytes() for c in codes]
-            yield pd.DataFrame(out)
+    def _codes(quantizer, mat):
+        b_mins, b_span = quantizer
+        return np.clip(
+            np.rint((mat - b_mins) / b_span * 255.0), 0, 255
+        ).astype(np.uint8)
 
-    return corpus.select(id_col, emb_col, *keep).mapInPandas(_encode, out_schema)
+    return _encode_map(corpus, id_col, emb_col, keep_cols, len(mins), bc, _codes)
 
 
 def sq_match(

@@ -859,3 +859,26 @@ def test_shared_shingles_matches_inline_build(spark):
             assert len(inline) > 0, fn.__name__  # pin must exercise pairs
     finally:
         spark.catalog.clearCache()
+
+
+def test_shingles_frame_is_validated(spark):
+    # a shingles= frame without _id, or whose _sh is not array<string>,
+    # raises naming the expected construction instead of failing (or
+    # silently matching nothing) deep inside the join plan
+    from pyspark.sql import functions as F
+
+    from docarray_spark.operators.dedup import (
+        minhash_dedup_pairs,
+        ngram_jaccard_exact_pairs,
+    )
+
+    df = spark.createDataFrame([(0, "a b c d")], "id long, text string")
+    bad = [
+        df.select(F.col("id"), F.split("text", " ").alias("_sh")),  # no _id
+        df.select(F.col("id").alias("_id"), F.col("text").alias("_sh")),
+        df.select(F.col("id").alias("_id"), F.array(F.lit(1)).alias("_sh")),
+    ]
+    for fn in (minhash_dedup_pairs, ngram_jaccard_exact_pairs):
+        for sh in bad:
+            with pytest.raises(ValueError, match=r"with_word_shingles\(.*_id"):
+                fn(df, id_col="id", text_col="text", shingles=sh)

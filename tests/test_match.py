@@ -128,6 +128,38 @@ def test_find_by_vectors_and_nulls(spark, corpus):
     assert res.iloc[0].query_id == 0
 
 
+def test_degenerate_corpus_rows_are_never_candidates(spark, corpus, queries):
+    # one rule for degenerate vectors (functions.vectors.as_matrix): a row
+    # with a NULL element or the wrong length is not a candidate, and the
+    # well-formed rows score exactly as they would alone
+    from docarray_spark.operators.ann import ivf_match
+
+    cdf, _ = corpus
+    qdf, _ = queries
+    bad = spark.createDataFrame(
+        [("x_null_elem", [0.5] * 15 + [None], 0), ("x_short", [0.5] * 8, 0),
+         ("x_long", [0.5] * 17, 0)],
+        schema="id string, embedding array<double>, label int",
+    )
+    dirty = cdf.unionByName(bad).repartition(3)
+
+    def rows(df):
+        return sorted((r.query_id, r.rank, r.match_id, r.score) for r in df.collect())
+
+    cents = [(r.id, r.embedding) for r in cdf.orderBy("id").limit(4).collect()]
+    cents = [(i, v) for i, (_, v) in enumerate(cents)]
+    for run in (
+        lambda c: match(c, qdf, k=20, metric="cosine", eps=0.0),
+        lambda c: ivf_match(c, qdf, k=20, n_probe=4, metric="sqeuclidean",
+                            centroids=cents, vectorized=True),
+    ):
+        got, want = rows(run(dirty)), rows(run(cdf))
+        # ranks and ids exact; scores up to BLAS blocking of other batch shapes
+        assert [g[:3] for g in got] == [w[:3] for w in want]
+        np.testing.assert_allclose([g[3] for g in got], [w[3] for w in want], rtol=1e-12, atol=1e-12)
+        assert not {m for _, _, m, _ in got} & {"x_null_elem", "x_short", "x_long"}
+
+
 def test_k_larger_than_corpus(spark, corpus, queries):
     cdf, _ = corpus
     qdf, _ = queries
