@@ -7,11 +7,11 @@ Spark-first Lloyd's iterations, built from the same scale-safe pieces as
 
 - **init** — the ``k`` corpus vectors with the smallest ``md5(id)``:
   a deterministic uniform hash-sample, engine-portable (no RNG state).
-- **assign** — argmin over the centroid set folded into the projection as a
-  literal array: a ZERO-SHUFFLE map over the corpus, whole-stage codegen.
-- **update** — per-dimension means via ``posexplode(dims)`` →
-  ``groupBy(cell, dim).avg``: hash aggregation is map-side combinable, so
-  the exchange ships k·d partial sums per partition, NOT the corpus.
+- **assign** — argmin against the broadcast centroid set, one
+  :func:`cell_sqdist` kernel per Arrow batch: a ZERO-SHUFFLE map.
+- **update** — per-partition ``(cell, dim)`` partial sums →
+  ``groupBy(cell, dim)``: the exchange ships k·d rows per partition, NOT
+  the corpus.
   Centroid components round to ``round_to`` decimals each iteration, which
   pins down float-summation order drift across engines/partitionings (the
   same stance the oracle-gated aggregates take with ``F.round``).
@@ -22,6 +22,8 @@ standard k-means budget. Everything corpus-sized stays distributed.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
@@ -77,85 +79,74 @@ def _assign_cells_literal(
     return base.select(best["cell"].alias("cell"), "id", "v", *keep_cols)
 
 
-def _assign_cells_exact(
+def cell_sqdist(X: np.ndarray, C: np.ndarray, exact: bool) -> np.ndarray:
+    """``(n, k)`` squared euclidean distances of the rows of ``X`` to the
+    centroids ``C`` — the one cell-distance kernel of every assignment
+    site. ``exact`` accumulates in DIMENSION ORDER, the identical float64
+    operation sequence as :func:`_assign_cells_literal`'s fold
+    Σ(x_j−c_j)² and an ANSI-SQL replay, so argmins are bit-for-bit the
+    fold's (r12 stage profile: the k=8·d=128 fold burned ~33 CPU-seconds
+    on 2 000 rows; this is milliseconds). The loop walks the transposed
+    batch with in-place ufuncs: the same IEEE operations in the same
+    order, without n×k temporaries per dimension. Otherwise the BLAS
+    ``‖c‖² − 2x·c`` form (the ‖x‖² row constant cancels in any argmin;
+    last-ulp drift vs the fold can flip near-exact ties, which is why
+    oracle-gated entries stay under ``LITERAL_ARGMIN_MAX_KD``)."""
+    if not exact:
+        return (C * C).sum(axis=1)[None, :] - 2.0 * (X @ C.T)
+    XT = np.ascontiguousarray(X.T)
+    d2t = np.zeros((len(C), len(X)))
+    diff = np.empty_like(d2t)
+    for j in range(C.shape[1]):
+        np.subtract(XT[j], C[:, j, None], out=diff)
+        np.multiply(diff, diff, out=diff)
+        d2t += diff
+    return d2t.T
+
+
+def nearest_cells(d2: np.ndarray, valid: np.ndarray) -> np.ndarray:
+    """Position of each row's nearest centroid in ``d2`` (from
+    :func:`cell_sqdist`) under the literal fold's rule — a strict ``<``
+    running minimum from +inf over the centroids in order: the FIRST
+    minimum wins (smallest cell id on ties, centroids being cell-sorted)
+    and NaN never wins. A row with no distance below +inf, like a row
+    :func:`as_matrix` rejects (``valid`` False), gets -1."""
+    d2 = np.where(np.isnan(d2), np.inf, d2)
+    idx = np.argmin(d2, axis=1)
+    idx[~valid | (d2[np.arange(len(d2)), idx] == np.inf)] = -1
+    return idx
+
+
+def _assign_cells_arrow(
     base: DataFrame,
     centroids: list[tuple[int, list[float]]],
     keep_cols: tuple[str, ...] = (),
+    exact: bool = True,
 ):
-    """Oracle-range assignment (k·d ≤ ``LITERAL_ARGMIN_MAX_KD``) as an
-    Arrow-batched ``arrow_udf`` whose squared distances accumulate in
-    DIMENSION ORDER — the identical float64 operation sequence as
-    :func:`_assign_cells_literal`'s fold (and an ANSI-SQL replay), so the
-    values are bit-for-bit the fold's, without the fold's interpreted
-    CodegenFallback evaluation (r12 stage profile: the k=8·d=128 literal
-    fold burned ~33 CPU-seconds on 2 000 rows; this path is milliseconds).
-    The multi-probe exact branch (:func:`assign_cells_multi`) established
-    and pinned the same equivalence in r10.
-
-    Fold-semantics edge cases mirrored exactly: centroids evaluated in the
-    given order with strict ``<`` (first minimum wins → smallest cell id on
-    ties when centroids arrive cell-sorted); a NULL embedding, a NULL
-    element, a length other than the centroids' (the fold's zip_with
-    NULL padding) or an all-NaN distance row keeps the fold's initial
-    ``(-1, inf)`` accumulator → ``cell = -1``."""
-    order_cells = [c for c, _ in centroids]
-    C = np.asarray([v for _, v in centroids], dtype=np.float64)  # (k, d)
-    cells_arr = np.asarray(order_cells, dtype=np.int64)
-    bc = base.sparkSession.sparkContext.broadcast((cells_arr, C))
-
-    @F.arrow_udf("int")
-    def _argmin_exact(emb: pa.Array) -> pa.Array:
-        cells_, C_ = bc.value
-        X, valid = as_matrix(emb, dim=C_.shape[1])
-        n = len(X)
-        # dimension-order accumulation == the literal fold's Σ(x_j−c_j)²
-        d2 = np.zeros((n, len(C_)), dtype=np.float64)
-        for j in range(C_.shape[1]):
-            diff = X[:, j, None] - C_[None, :, j]
-            d2 += diff * diff
-        # fold semantics: strict < vs a running min starting at +inf; NaN
-        # never wins (NaN < acc is false), all-NaN/NULL rows keep cell -1
-        d2 = np.where(np.isnan(d2), np.inf, d2)
-        idx = np.argmin(d2, axis=1)
-        out = cells_[idx].astype("int64")
-        out[~np.isfinite(d2[np.arange(n), idx])] = -1
-        out[~valid] = -1
-        return pa.array(out.astype(np.int32))
-
-    return base.select(_argmin_exact("v").alias("cell"), "id", "v", *keep_cols)
-
-
-def _assign_cells_broadcast(
-    base: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    keep_cols: tuple[str, ...] = (),
-):
-    """Large-k·d assignment: the centroid matrix is BROADCAST once per
-    executor and the argmin runs as an Arrow-batched ``arrow_udf`` (one
-    BLAS ``X @ Cᵀ`` per batch) — same zero-shuffle map shape as the
-    literal fold, without the codegen blow-up. ``np.argmin`` keeps the
-    FIRST minimum, i.e. the smallest cell id on exact ties — the same
-    tie-break as the literal fold's strict ``<`` (centroids arrive
-    cell-sorted). Rows :func:`as_matrix` rejects get cell -1.
-
-    Note: BLAS computes ``‖c‖² − 2x·c`` (the ‖x‖² row-constant cancels in
-    the argmin); last-ulp float drift vs the literal fold can flip
-    near-exact ties, which is why oracle-gated entries stay under
-    ``LITERAL_ARGMIN_MAX_KD`` on the literal path."""
+    """Zero-shuffle assignment as an Arrow-batched ``arrow_udf``: the
+    centroid matrix is BROADCAST once per executor and each batch runs
+    :func:`cell_sqdist` + :func:`nearest_cells` — dimension-order
+    (``exact``, bit-identical to the literal fold, NULL / ragged / all-NaN
+    rows at the fold's initial ``(-1, inf)`` accumulator → cell -1) or the
+    BLAS form (large k·d, where the literal tree would also blow janino's
+    method budget — VERDICT r2 #2)."""
     cents = sorted(centroids)
     cells = np.asarray([c for c, _ in cents], dtype=np.int64)
     C = np.asarray([v for _, v in cents], dtype=np.float64)  # (k, d)
-    Cn = (C * C).sum(axis=1)
-    bc = base.sparkSession.sparkContext.broadcast((cells, C, Cn))
+    bc = base.sparkSession.sparkContext.broadcast((cells, C))
 
     @F.arrow_udf("int")
     def _argmin(emb: pa.Array) -> pa.Array:
-        cells_, C_, Cn_ = bc.value
+        cells_, C_ = bc.value
         X, valid = as_matrix(emb, dim=C_.shape[1])
-        d2 = Cn_[None, :] - 2.0 * (X @ C_.T)
-        return pa.array(np.where(valid, cells_[np.argmin(d2, axis=1)], -1).astype(np.int32))
+        pos = nearest_cells(cell_sqdist(X, C_, exact), valid)
+        return pa.array(np.where(pos >= 0, cells_[pos], -1).astype(np.int32))
 
     return base.select(_argmin("v").alias("cell"), "id", "v", *keep_cols)
+
+
+_assign_cells_exact = partial(_assign_cells_arrow, exact=True)
+_assign_cells_broadcast = partial(_assign_cells_arrow, exact=False)
 
 
 def assign_cells(
@@ -174,12 +165,10 @@ def assign_cells(
     ``_bucket``)."""
     k = len(centroids)
     d = len(centroids[0][1]) if k else 0
-    if k * d <= literal_budget:
-        # same values as the literal fold (dimension-order accumulation,
-        # identical tie/NULL semantics — pinned in test_pack_cluster), but
-        # Arrow-batched numpy instead of interpreted HOF evaluation
-        return _assign_cells_exact(base, centroids, keep_cols)
-    return _assign_cells_broadcast(base, centroids, keep_cols)
+    # below the budget: the literal fold's values (dimension-order
+    # accumulation, identical tie/NULL semantics — pinned in
+    # test_pack_cluster), Arrow-batched instead of interpreted HOF evaluation
+    return _assign_cells_arrow(base, centroids, keep_cols, exact=k * d <= literal_budget)
 
 
 def assign_cells_multi(
@@ -194,30 +183,30 @@ def assign_cells_multi(
     :func:`assign_cells`; ``_probe`` 0 = primary). ``centroid_dist`` is
     the COSINE distance to the PRIMARY centroid (null on secondary
     probes) — semantic_dedup's keep policy needs it exactly once per row.
-    A row :func:`as_matrix` rejects gets cell -1 on every probe and a
-    NULL ``centroid_dist``.
+    A row :func:`as_matrix` rejects, or one with no distance below +inf
+    (an all-NaN row), gets cell -1 on every probe and a NULL
+    ``centroid_dist``.
 
     One zero-shuffle ``mapInArrow`` over the corpus emitting n_probe
     rows per input row (the probe fan-out is the operator's documented
     ~p× cell-work cost, never a shuffle).
 
     Distance-form dispatch mirrors :func:`assign_cells` (r10 review): at
-    or below ``LITERAL_ARGMIN_MAX_KD`` the squared distances accumulate
-    in DIMENSION ORDER — the same summation order as the literal fold
-    and an ANSI-SQL ``list_distance`` replay, so near-tie rankings can't
-    flip between engine and oracle; above the budget the BLAS
-    ``‖c‖²−2x·c`` form takes over (oracle-gated callers stay under the
-    budget, same contract as single-probe assignment)."""
+    or below ``LITERAL_ARGMIN_MAX_KD`` the :func:`cell_sqdist` distances
+    accumulate in DIMENSION ORDER — the same summation order as the
+    literal fold and an ANSI-SQL ``list_distance`` replay, so near-tie
+    rankings can't flip between engine and oracle; above the budget the
+    BLAS form takes over (oracle-gated callers stay under the budget,
+    same contract as single-probe assignment)."""
     from pyspark.sql import types as T
 
     p = max(1, min(int(n_probe), len(centroids)))
     cents = sorted(centroids)
     cells = np.asarray([c for c, _ in cents], dtype=np.int64)
     C = np.asarray([v for _, v in cents], dtype=np.float64)  # (k, d)
-    Cn = (C * C).sum(axis=1)
     Ccos = unit_rows(C)
     exact = C.size <= LITERAL_ARGMIN_MAX_KD
-    bc = base.sparkSession.sparkContext.broadcast((cells, C, Cn, Ccos))
+    bc = base.sparkSession.sparkContext.broadcast((cells, C, Ccos))
     in_schema = base.select("id", "v").schema
     out_schema = T.StructType([
         T.StructField("cell", T.IntegerType()),
@@ -230,22 +219,15 @@ def assign_cells_multi(
     arrow_schema = to_arrow_schema(out_schema)
 
     def _gen(batches):
-        cells_, C_, Cn_, Ccos_ = bc.value
+        cells_, C_, Ccos_ = bc.value
         for batch in batches:
             if not batch.num_rows:
                 continue
             X, valid = as_matrix(batch.column("v"), dim=C_.shape[1])
-            if exact:
-                # dimension-order accumulation == the literal fold's /
-                # an oracle's Σ(x_j−c_j)² order; n×k temporaries per dim
-                d2 = np.zeros((len(X), len(C_)), dtype=np.float64)
-                for j in range(C_.shape[1]):
-                    diff = X[:, j, None] - C_[None, :, j]
-                    d2 += diff * diff
-            else:
-                d2 = Cn_[None, :] - 2.0 * (X @ C_.T)
-            # stable argsort: exact ties keep centroid (= cell-id) order,
-            # matching assign_cells' first-minimum tie-break at _probe=0
+            d2 = cell_sqdist(X, C_, exact)
+            valid = nearest_cells(d2, valid) >= 0
+            # stable argsort (NaN last): exact ties keep centroid (= cell-id)
+            # order, so _probe=0 is nearest_cells' first minimum
             idx = np.argsort(d2, axis=1, kind="stable")[:, :p]
             Xn = unit_rows(X)
             # primary cosine distance in the SAME dot form as the
@@ -289,27 +271,25 @@ def _lloyd_partials(base: DataFrame, centroids: list[tuple[int, list[float]]]):
     accumulate in row order, the same order Spark's own partial-avg hash
     agg uses, and the caller's ``round_to`` rounding absorbs merge-order
     ulps (the reason non-final iterations may run off the SQL plan at
-    all — see :func:`kmeans`). Rows :func:`as_matrix` rejects count in
-    no cell."""
+    all — see :func:`kmeans`). Rows :func:`as_matrix` rejects and rows
+    with no distance below +inf (one NaN element) count in no cell — a
+    NaN row in cell 0 would poison that centroid, then every argmin."""
     cents = sorted(centroids)
     cells = np.asarray([c for c, _ in cents], dtype=np.int64)
     C = np.asarray([v for _, v in cents], dtype=np.float64)  # (k, d)
-    Cn = (C * C).sum(axis=1)
     k, d = C.shape
-    bc = base.sparkSession.sparkContext.broadcast((cells, C, Cn))
+    bc = base.sparkSession.sparkContext.broadcast((cells, C))
 
     def _part(batches):
-        cells_, C_, Cn_ = bc.value
+        cells_, C_ = bc.value
         sums = np.zeros((k, d), dtype=np.float64)
         cnt = np.zeros(k, dtype=np.int64)
         for batch in batches:
             X, valid = as_matrix(batch.column("v"), dim=d)
-            if not valid.any():
-                continue
-            X = X[valid]
-            a = np.argmin(Cn_[None, :] - 2.0 * (X @ C_.T), axis=1)
-            np.add.at(sums, a, X)
-            cnt += np.bincount(a, minlength=k)
+            a = nearest_cells(cell_sqdist(X, C_, exact=False), valid)
+            hit = a >= 0
+            np.add.at(sums, a[hit], X[hit])
+            cnt += np.bincount(a[hit], minlength=k)
         hit = np.nonzero(cnt)[0]
         if len(hit):
             yield pa.RecordBatch.from_arrays(

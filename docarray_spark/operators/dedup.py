@@ -1013,7 +1013,8 @@ def semantic_dedup(
     differs in length from the centroids cannot participate in
     similarity and come back as ``keep=true`` singletons with null
     ``cell``/``centroid_dist`` (a dedup must never silently drop rows it
-    could not compare; ADVICE r8 #4). For the rest: ``dup_group`` labels
+    could not compare; ADVICE r8 #4) — a row with a NaN element likewise,
+    with ``cell`` -1. For the rest: ``dup_group`` labels
     the connected component of the within-cell ``cosine_dist < eps``
     graph (smallest member id — singletons label themselves); ``keep``
     marks the member retained per the paper's
@@ -1069,7 +1070,7 @@ def semantic_dedup(
     summation order as p=1's literal fold and an oracle's
     ``list_distance``, so near-tie primaries agree (r10 review); above
     the budget the BLAS form takes over with its documented last-ulp
-    tie drift (``_assign_cells_broadcast``);
+    tie drift (``cluster.cell_sqdist``);
     output columns are unchanged (``cell``/``centroid_dist`` are the
     PRIMARY assignment's). Any id type: non-integral ids are hashed to
     longs for the component pass and groups are re-labelled by smallest
@@ -1164,6 +1165,11 @@ def semantic_dedup(
         ids = tbl.column("id").to_pylist()
         cell = tbl.column("cell")[0].as_py()
         n = len(ids)
+        if cell == -1:  # no finite centroid distance (a NaN element):
+            # keep=true singletons, as the n_probe > 1 path returns them
+            return pa.table({"id": ids, "cell": [cell] * n, "dup_group": ids,
+                             "centroid_dist": [None] * n, "keep": [True] * n},
+                            schema=arrow_schema)
         if n > max_cell_rows:
             # enforce the sizing law HERE (no extra corpus-count job) so
             # an undersized k_clusters fails loudly with the fix instead

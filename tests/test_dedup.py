@@ -683,6 +683,26 @@ def test_semantic_dedup_null_embeddings_and_guards(spark):
         semantic_dedup(df, k_clusters=1, max_cell_rows=4).collect()
 
 
+def test_semantic_dedup_nan_row_is_a_singleton(spark):
+    """A row with a NaN element has no finite centroid distance: both
+    probe paths return it as a keep=true singleton in cell -1 with a null
+    centroid_dist (the single-probe grouped pass raised a KeyError on
+    cell -1 before)."""
+    from docarray_spark.operators import semantic_dedup
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [1.0, 0.001]), (2, [0.0, 1.0]), (3, [float("nan"), 1.0])],
+        "id long, embedding array<double>",
+    )
+    cents = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
+    for p in (1, 2):
+        out = {r.id: r for r in semantic_dedup(
+            df, centroids=cents, eps=0.05, n_probe=p, persist=False).collect()}
+        assert sorted(out) == [0, 1, 2, 3]
+        assert tuple(out[3])[1:] == (-1, 3, None, True)
+        assert out[0].dup_group == out[1].dup_group == 0 and out[0].keep != out[1].keep
+
+
 # ---- r12 optimization pins: Arrow kernels ≡ the expression/str forms ----
 
 

@@ -466,6 +466,64 @@ def test_assign_cells_exact_equals_literal(spark):
     assert "ArrowEvalPython" in explain_str(assign_cells(base, cents))
 
 
+def test_cell_sqdist_exact_equals_dimension_order_loop():
+    """The kernel's transposed in-place loop is the plain dimension-order
+    loop, bit for bit, on random rows, exact ties and NaN elements; and
+    nearest_cells keeps the fold's rule (first minimum, NaN never wins,
+    no finite distance or an invalid row -> -1)."""
+    import numpy as np
+
+    from docarray_spark.operators.cluster import cell_sqdist, nearest_cells
+
+    def loop(X, C):
+        d2 = np.zeros((len(X), len(C)))
+        for j in range(C.shape[1]):
+            diff = X[:, j, None] - C[None, :, j]
+            d2 += diff * diff
+        return d2
+
+    rng = np.random.default_rng(7)
+    for n, k, d in [(1, 1, 1), (10, 4, 64), (257, 16, 128)]:
+        X, C = rng.standard_normal((n, d)), rng.standard_normal((k, d))
+        T = rng.integers(-2, 3, (n, d)).astype(float)  # many exact ties
+        T[0, 0] = np.nan
+        for rows, cents in ((X, C), (T, np.round(C))):
+            assert np.array_equal(cell_sqdist(rows, cents, exact=True),
+                                  loop(rows, cents), equal_nan=True)
+    d2 = np.array([[2.0, 1.0, 1.0], [np.nan, 3.0, 3.0], [np.nan] * 3,
+                   [np.inf, np.nan, np.inf], [0.0, 1.0, 2.0]])
+    valid = np.array([True, True, True, True, False])
+    assert nearest_cells(d2, valid).tolist() == [1, 1, -1, -1, -1]
+
+
+def test_kmeans_nan_row_gets_no_cell(spark):
+    """One NaN element no longer collapses k-means: the row counts in no
+    cell of the Lloyd partials (np.argmin's first-NaN pick used to put it
+    in cell 0, NaN-poison that centroid and then every row's argmin, so
+    all rows ended at -1) and gets cell -1; the clean rows keep their
+    clusters."""
+    import hashlib
+    import math
+
+    # blob = md5 rank mod 4: the hash-sample init takes one row per blob
+    by_md5 = sorted(range(200), key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
+    blob = {i: r % 4 for r, i in enumerate(by_md5)}
+    corners = [(10.0, 10.0), (-10.0, 10.0), (10.0, -10.0), (-10.0, -10.0)]
+    rows = [(i, [corners[blob[i]][0] + (i % 7) * 0.1,
+                 corners[blob[i]][1] - (i % 5) * 0.1, 0.0, 1.0]) for i in range(200)]
+    df = spark.createDataFrame(rows + [(200, [float("nan"), 0.0, 0.0, 0.0])],
+                               "id long, embedding array<float>")
+    cent, assigned = kmeans(df, k=4, n_iter=3, id_col="id")
+    got = {r.id: r.cell for r in assigned.collect()}
+    assert got.pop(200) == -1
+    members: dict = {}
+    for i, c in got.items():
+        members.setdefault(c, set()).add(i)
+    want = [{i for i in range(200) if blob[i] == b} for b in range(4)]
+    assert sorted(map(sorted, members.values())) == sorted(map(sorted, want))
+    assert all(math.isfinite(x) for r in cent.collect() for x in r.centroid)
+
+
 def test_pack_sequences_requires_group_col(spark):
     """VERDICT r2 #3: a global pack is an Exchange SinglePartition — refuse
     it unless the caller opts in explicitly."""
