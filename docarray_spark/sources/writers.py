@@ -301,8 +301,9 @@ MANIFEST_VERSION = 2
 #: instead of one version DIRECTORY, so appends publish zero-copy
 #: snapshots and partial merges are snapshot-isolated. ``content_sum``
 #: semantics are unchanged from v2 — v2 and v3 manifests of the same
-#: rows compare equal. Rename-/pointer-mode exports keep recording v2;
-#: only ``swap_mode='manifest'`` sidecars record 3.
+#: rows compare equal. Rename-mode exports keep recording v2 (so do
+#: legacy ``_v_N/`` pointer exports, which are read but no longer
+#: written); only ``swap_mode='manifest'`` sidecars record 3.
 SNAPSHOT_FORMAT = 3
 
 _LAYOUT_SIDECAR = "_shard_layout.json"
@@ -325,7 +326,7 @@ class ConcurrentPublishError(RuntimeError):
     :func:`compact_shards` to have that re-run happen automatically."""
 
 #: schemes where a directory rename is a non-atomic O(data) copy+delete —
-#: the pointer-flip swap is the safe default there
+#: the manifest snapshot publish is the safe default there
 _RENAME_IS_COPY_SCHEMES = (
     "s3", "s3a", "s3n", "gs", "wasb", "wasbs", "abfs", "abfss", "oss",
     "cosn", "swift",
@@ -363,18 +364,11 @@ def _load_layout_sidecar(root: str, spark: SparkSession) -> dict | None:
 def resolve_shards_path(path: str, spark: SparkSession | None = None) -> str:
     """Resolve a shard-export root to the ONE directory holding its live
     ``shard=N/`` data. Rename-mode exports (the local/HDFS default) keep
-    data directly under ``path`` — returned unchanged. Pointer-mode
-    exports (``swap_mode='pointer'``) keep data under a hidden versioned
-    subdirectory named by the one-line ``_CURRENT`` pointer file; a FULL
-    rewrite publishes a NEW version by atomically overwriting that one
-    small file (a single-object PUT — atomic everywhere, including
-    S3A/GCS where a directory rename is a non-atomic O(data) copy), so a
-    crash mid-FULL-rewrite always leaves readers on a complete version.
-    Scope honestly (ADVICE r11): pointer-mode PARTIAL merges and appends
-    mutate shard partitions inside the live version directory in place —
-    non-atomic on object stores and visible to a mid-scan reader
-    regardless of ``keep_versions``; ``swap_mode='manifest'`` is the
-    layout that snapshot-isolates every mutation class.
+    data directly under ``path`` — returned unchanged. Legacy pointer
+    exports (format v2, no longer written) keep data under a hidden
+    ``_v_N/`` version directory named by the one-line ``_CURRENT`` file
+    — returned as that directory; their first :func:`merge_shards` or
+    :func:`compact_shards` migrates them to the manifest layout.
 
     Manifest-mode exports have no single data directory (a snapshot is a
     SET of batch directories named by the current manifest file) — this
@@ -399,11 +393,11 @@ def read_shards(
     version: "int | str | None" = None,
 ) -> DataFrame:
     """Consumer-side reader for a :func:`save_shards` export, any swap
-    mode: follows the ``_CURRENT`` pointer (version dir or snapshot
-    manifest) or reads the root (rename-mode), optionally pruned to a
-    shard list — the filter lands in the scan's PartitionFilters, so a
-    dataloader rank reads ONLY its ``shard=N`` directories regardless of
-    export size or swap mode.
+    mode: follows the ``_CURRENT`` pointer (snapshot manifest, or a
+    legacy ``_v_N/`` version dir) or reads the root (rename-mode),
+    optionally pruned to a shard list — the filter lands in the scan's
+    PartitionFilters, so a dataloader rank reads ONLY its ``shard=N``
+    directories regardless of export size or swap mode.
 
     ``version`` pins the read to a RETAINED snapshot instead of current
     (VERDICT r11 #3): an epoch-long dataloader resolves
@@ -475,7 +469,8 @@ def read_shards(
 
 def shard_versions(path: str, spark: SparkSession | None = None) -> dict:
     """Snapshot inventory for a :func:`save_shards` export: ``mode``
-    (``rename``/``pointer``/``manifest``), ``current`` (the live
+    (``rename``/``manifest``, or ``pointer`` for a legacy ``_v_N/``
+    export not yet migrated), ``current`` (the live
     snapshot's sequence number; None for rename mode), and ``versions``
     (retained sequence numbers, oldest first — valid ``version=`` pins
     for :func:`read_shards`). The consumer-side half of
@@ -690,6 +685,15 @@ def _publish_snapshot(
             "Nothing was written; re-run the merge against the new "
             "current snapshot."
         )
+    if publish == "append" and cur is not None and not cur.startswith("_m_"):
+        # an append shares the current manifest's batches; over a legacy
+        # _v_ version dir there is none, so the snapshot would hold only
+        # the appended rows and the GC below would sweep the rest
+        raise ValueError(
+            f"save_shards: mode='append' onto {root!r}, whose current "
+            f"snapshot {cur!r} is not a manifest — migrate it with "
+            "merge_shards or compact_shards first"
+        )
     old_map: dict = {}
     old_man: "dict | None" = None
     if cur is not None and cur.startswith("_m_"):
@@ -852,112 +856,6 @@ def _manifest_gc(
                         _rm(f"{root}/{d}/{sub}", spark)
 
 
-def _new_version_write(
-    df: DataFrame,
-    root: str,
-    n_shards: int,
-    id_col: str,
-    order_within: list[str] | None,
-    files_per_shard: int,
-    max_rows_per_file: int | None,
-    spark: SparkSession,
-    keep_versions: int = 1,
-    expected=_UNSET,
-) -> str:
-    """Pointer-mode publish: write the full export into a fresh hidden
-    ``_v_<n+1>/`` version directory, then atomically flip the
-    ``_CURRENT`` pointer, then garbage-collect superseded versions
-    beyond the newest ``keep_versions`` (and any legacy ``shard=*``
-    dirs at the root — upgrading a rename-mode export in place). Every
-    crash window is safe: before the flip the old version (or legacy
-    root) is still served; after the flip the new version is served and
-    the stale dirs are GC'd by the NEXT rewrite.
-
-    ``keep_versions`` is the snapshot-retention knob (the Iceberg/Delta
-    discipline, sized down): the default 1 keeps only the flipped-in
-    version — cheapest, but a reader that resolved the pointer BEFORE a
-    rewrite and is still scanning (an epoch-long dataloader) loses its
-    files mid-read. ``keep_versions=2`` holds the previous version
-    through one full rewrite cycle at 2× storage; size it to the
-    longest reader you run. Returns the new data root."""
-    from .registry import _exists, _read_text
-
-    cur = None
-    if _exists(f"{root}/{_POINTER_FILE}", spark):
-        cur = _read_text(f"{root}/{_POINTER_FILE}", spark).strip()
-    if expected is not _UNSET and cur != expected:
-        # fail FAST (r12 review): the caller's merged rows were computed
-        # against `expected`; a publish that raced in since then would
-        # be silently reverted if this writer continued
-        raise ConcurrentPublishError(
-            f"shard-export publish aborted: _CURRENT at {root!r} moved "
-            f"from {expected!r} to {cur!r} since this writer resolved "
-            "its input snapshot — a concurrent writer published in "
-            "between; publishing anyway would silently revert its rows. "
-            "Nothing was written; re-run the merge against the new "
-            "current snapshot."
-        )
-    # _parse_seq, not rsplit: an overwrite MIGRATION from a manifest
-    # export arrives here with cur = "_m_<n>_<token>" — the sequence
-    # continues across the layout change (r12 self-review: rsplit took
-    # the token and crashed int())
-    nxt_n = (_parse_seq(cur) + 1) if cur else 1
-    nxt = f"_v_{nxt_n:010d}"
-    # GC stale versions from a prior crashed rewrite BEFORE writing (a
-    # partial _v_ dir NEWER than current never got its pointer flip and
-    # is garbage; retained older versions wait for the post-flip policy)
-    for name in _list_version_dirs(root, spark):
-        if cur is None or name > cur:
-            _delete_dir(f"{root}/{name}", spark)
-    try:
-        # errorifexists: version-dir names are deterministic (cur+1), so
-        # a concurrent writer targets the SAME directory — Spark's
-        # existence check makes this writer abort BEFORE clobbering the
-        # other's (possibly already-published) files, instead of
-        # silently merging two writers' output (VERDICT r11 #2;
-        # best-effort — swap_mode='manifest' uses collision-free names)
-        _shard_layout_write(
-            df, f"{root}/{nxt}", n_shards, id_col, order_within,
-            files_per_shard, max_rows_per_file, "error",
-        )
-    except Exception as ex:
-        if "PATH_ALREADY_EXISTS" in str(ex) or "already exists" in str(ex):
-            raise ConcurrentPublishError(
-                f"shard-export publish aborted: version dir {nxt!r} at "
-                f"{root!r} appeared while this writer was preparing it — "
-                "a concurrent writer is publishing the same version; "
-                "this writer wrote nothing. Re-run the merge from the "
-                "new current snapshot."
-            ) from ex
-        raise
-    _flip_pointer(root, cur, nxt, spark)  # THE atomic publish (optimistic)
-    # GC superseded versions beyond the retention window + any legacy
-    # root-level shard dirs (the pre-pointer layout, fully merged into
-    # the version just published)
-    keep = sorted(_list_version_dirs(root, spark), reverse=True)[
-        : max(1, keep_versions)
-    ]
-    for name in _list_version_dirs(root, spark):
-        if name not in keep:
-            _delete_dir(f"{root}/{name}", spark)
-    if cur is None:
-        from .registry import _list_subdirs
-
-        for name in _list_subdirs(root, spark):
-            if name.startswith("shard="):
-                _delete_dir(f"{root}/{name}", spark)
-    elif cur.startswith("_m_"):
-        # migrated from a manifest-layout export: its batch dirs and
-        # manifest files are unreferenced now that _CURRENT names a
-        # version directory
-        from .registry import _list_subdirs
-
-        for name in _list_subdirs(root, spark):
-            if name.startswith("_b_") or name == _MANIFEST_DIR:
-                _delete_dir(f"{root}/{name}", spark)
-    return f"{root}/{nxt}"
-
-
 def _recover_swap(root: str, spark: SparkSession) -> None:
     """Crash recovery for the rename-mode swap (ADVICE r10): a hard
     process death between ``rename(path -> .__old__)`` and
@@ -976,25 +874,43 @@ def _recover_swap(root: str, spark: SparkSession) -> None:
 
 
 def _resolve_swap_mode(swap_mode: str, path: str) -> str:
-    """``'auto'`` picks rename where a directory rename is atomic and
-    cheap (local/HDFS) and the file-manifest snapshot layout on object
-    stores (where rename is an O(data) copy and a one-object pointer PUT
-    is the only atomic publish). ``'pointer'`` — the r11 version-DIRECTORY
-    pointer — stays available explicitly."""
+    """One publish protocol per filesystem kind: ``'auto'`` picks rename
+    where a directory rename is atomic and cheap (local/HDFS) and the
+    file-manifest snapshot layout on object stores (where rename is an
+    O(data) copy and a one-object pointer PUT is the only atomic
+    publish)."""
     if swap_mode == "auto":
         return "rename" if _fs_atomic_rename(path) else "manifest"
-    if swap_mode not in ("rename", "pointer", "manifest"):
+    if swap_mode not in ("rename", "manifest"):
         raise ValueError(
-            f"swap_mode must be auto|rename|pointer|manifest, got {swap_mode!r}"
+            f"swap_mode must be auto|rename|manifest, got {swap_mode!r}"
         )
     return swap_mode
 
 
+def _write_swap_mode(layout_mode: str) -> str:
+    """Writes to a legacy ``'pointer'`` export (format v2, ``_v_N/``
+    version dirs, no longer written) publish manifest snapshots."""
+    return "manifest" if layout_mode == "pointer" else layout_mode
+
+
+def _record_manifest_layout(path: str, sidecar, spark: SparkSession) -> None:
+    """After a manifest publish onto a legacy pointer export, make its
+    sidecar say so — else every later append is refused as a layout
+    migration. Written after the flip: a crash in between only leaves
+    appends refused until the next merge or compaction."""
+    if sidecar is not None and sidecar.get("swap_mode") == "pointer":
+        _save_layout_sidecar(path, {
+            **sidecar, "swap_mode": "manifest",
+            "manifest_version": SNAPSHOT_FORMAT,
+        }, spark)
+
+
 def _current_pointer(root: str, spark: SparkSession | None) -> str | None:
     """Content of the export's ``_CURRENT`` pointer file (stripped), or
-    None for rename-layout exports that have no pointer. ``_v_…`` names
-    a version directory (pointer mode); ``_m_…`` a manifest file under
-    ``_manifests/`` (manifest mode)."""
+    None for rename-layout exports that have no pointer. ``_m_…`` names
+    a manifest file under ``_manifests/`` (manifest mode); ``_v_…`` a
+    version directory (a legacy pointer export, read only)."""
     from .registry import _exists, _read_text
 
     p = f"{root}/{_POINTER_FILE}"
@@ -1132,10 +1048,6 @@ def save_shards(
     - ``'rename'`` — data at the root; a full rewrite swaps via two
       directory renames (atomic on POSIX/HDFS, an O(data) copy on
       object stores).
-    - ``'pointer'`` (v2) — hidden ``_v_N/`` version directories behind
-      an atomically-flipped one-line ``_CURRENT`` file; full rewrites
-      are crash-safe everywhere, but appends and partial merges mutate
-      the live version dir in place.
     - ``'manifest'`` (v3, the Iceberg discipline sized down) —
       ``_CURRENT`` names a small manifest FILE mapping each shard to
       the immutable ``_b_N_*/`` batch directories that own it. EVERY
@@ -1149,7 +1061,10 @@ def save_shards(
     ``'auto'`` (default) resolves to the export's ESTABLISHED mode when
     one exists (an append or knob-less refresh never silently migrates
     the layout family — ADVICE r11), else rename on rename-atomic
-    filesystems and manifest on object-store schemes. The choice — with
+    filesystems and manifest on object-store schemes. Legacy format-v2
+    pointer exports (``_v_N/`` version dirs) are read; a merge,
+    compaction or overwrite migrates them to manifest, and an append
+    raises until then. The choice — with
     every other layout knob and the format version — is persisted in a
     ``_shard_layout.json`` sidecar at the export root, which
     ``mode='append'``, :func:`merge_shards` and ``stream_merge_shards``
@@ -1157,11 +1072,10 @@ def save_shards(
     ``files_per_shard`` can no longer silently collapse a multi-file
     export; an append with contradicting knobs raises instead of
     scattering rows into the wrong shard dirs). ``keep_versions``
-    (pointer/manifest) is snapshot retention: how many snapshots the
-    post-flip GC keeps — default 1 (current only); size it to the
-    longest-running reader, and to ≥2 whenever concurrent
-    readers/writers overlap a rewrite (see :func:`_new_version_write`,
-    :func:`_publish_snapshot`).
+    (manifest) is snapshot retention: how many snapshots the post-flip
+    GC keeps — default 1 (current only); size it to the longest-running
+    reader, and to ≥2 whenever concurrent readers/writers overlap a
+    rewrite (see :func:`_publish_snapshot`).
 
     ``compact_at`` (manifest-layout ``mode='append'`` only) bounds
     append-history fragmentation: every zero-copy append grows the
@@ -1175,8 +1089,7 @@ def save_shards(
     :func:`compact_shards` stop-the-world pass. Per-call policy, not
     persisted. Other modes/layouts raise: overwrite publishes one
     batch by construction, merges self-compact the shards they touch,
-    and pointer/rename appends write into live directories (nothing to
-    fold).
+    and rename appends write into live directories (nothing to fold).
 
     ``manifest_scope`` (manifest-layout ``mode='append'`` only) bounds
     the RETURNED verification manifest's cost: the default
@@ -1191,9 +1104,9 @@ def save_shards(
     against a stored snapshot manifest with a rolling sum, or run a
     periodic ``'snapshot'`` append / :func:`compact_shards` for a full
     audit. Other modes raise: an overwrite's read-back is already
-    proportional to what it wrote, and pointer/rename appends
-    interleave their files into live shard directories — there is no
-    delta directory to scope the read-back to.
+    proportional to what it wrote, and rename appends interleave their
+    files into live shard directories — there is no delta directory to
+    scope the read-back to.
 
     ``manifest_meta`` (manifest layout only) is a small JSON-able dict
     stored under ``"meta"`` in the published snapshot manifest — it
@@ -1220,7 +1133,7 @@ def save_shards(
     # persisted layout exactly like merge_shards — an append with a
     # different n_shards/hash_method scatters rows into the wrong shard
     # dirs, and 'auto' swap resolved from the filesystem scheme alone
-    # could flip a pointer export to rename layout (appended rows
+    # could flip a manifest export to rename layout (appended rows
     # invisible behind the still-followed pointer — silent data loss).
     # An OVERWRITE is a re-export: passed knobs win (re-exporting IS the
     # documented way to change a layout), but 'auto' still defers to the
@@ -1230,7 +1143,7 @@ def save_shards(
     )
     established = _established_swap_mode(sidecar, path, spark)
     if (swap_mode is _UNSET or swap_mode == "auto") and established is not None:
-        layout["swap_mode"] = established
+        layout["swap_mode"] = _write_swap_mode(established)
     if keep_versions is _UNSET and sidecar is not None and mode != "append":
         # keep_versions is GC policy, not a layout contract (see
         # _resolve_shard_layout) — but that cuts both ways: an overwrite
@@ -1267,7 +1180,7 @@ def save_shards(
         established is None and has_legacy_dirs
     ):
         # append onto a LEGACY rename-layout export (no sidecar, no
-        # pointer) would publish a version/snapshot holding only the
+        # pointer) would publish a snapshot holding only the
         # appended rows and then GC the root shard dirs — silent data
         # loss. Migration goes through merge_shards or an explicit
         # overwrite.
@@ -1275,7 +1188,7 @@ def save_shards(
             f"save_shards: mode='append' with swap_mode={resolved_swap!r} "
             f"cannot migrate the rename-layout export at {path!r} "
             "— use merge_shards (merges existing rows into the "
-            "new version) or mode='overwrite'"
+            "new snapshot) or mode='overwrite'"
         )
     if manifest_scope not in ("snapshot", "batch"):
         raise ValueError(
@@ -1289,7 +1202,7 @@ def save_shards(
             "save_shards: manifest_scope='batch' applies only to "
             f"mode='append' on a manifest-layout export (got mode={mode!r}, "
             f"swap_mode={resolved_swap!r}) — an overwrite's read-back is "
-            "proportional to what it wrote, and pointer/rename appends "
+            "proportional to what it wrote, and rename appends "
             "interleave files into live shard directories with no delta "
             "directory to scope to"
         )
@@ -1308,10 +1221,10 @@ def save_shards(
             "save_shards: compact_at applies only to mode='append' on a "
             f"manifest-layout export (got mode={mode!r}, "
             f"swap_mode={resolved_swap!r}) — overwrites publish a single "
-            "batch already, and pointer/rename appends write into live "
+            "batch already, and rename appends write into live "
             "directories with no batch list to fold"
         )
-    if mode in ("error", "ignore") and resolved_swap in ("manifest", "pointer"):
+    if mode in ("error", "ignore") and resolved_swap == "manifest":
         # honor Spark's errorifexists/ignore writer contract (r12
         # review): these layouts used to route every non-append mode
         # through a full 'rewrite' publish, silently replacing — and
@@ -1352,11 +1265,11 @@ def save_shards(
     # check instead of arming it); the stored layout is immutable
     # between re-exports
     write_sidecar = not (mode == "append" and sidecar is not None)
-    if write_sidecar and resolved_swap in ("manifest", "pointer"):
+    if write_sidecar and resolved_swap == "manifest":
         # persist the layout BEFORE the publish (r12 review): a crash
         # between the pointer flip and a post-publish sidecar write
         # leaves an export whose knob-less appends/merges are wedged on
-        # 'n_shards is required'. Batch/version dirs never wipe the
+        # 'n_shards is required'. Batch dirs never wipe the
         # root, so the early write survives the publish; rename-mode
         # overwrite DOES wipe the root and keeps the post-write below.
         _save_layout_sidecar(path, sidecar_payload, spark)
@@ -1392,21 +1305,6 @@ def save_shards(
                 # (appended files share shards with prior batches)
                 back = _manifest_read(spark, path, man)
                 sizes = _manifest_sizes(path, man, spark)
-    elif resolved_swap == "pointer":
-        from .registry import _exists
-
-        if mode == "append" and _exists(f"{path}/{_POINTER_FILE}", spark):
-            data_root = resolve_shards_path(path, spark)
-            _shard_layout_write(
-                out, data_root, n_shards, id_col, order_within,
-                files_per_shard, max_rows_per_file, mode,
-            )
-        else:
-            data_root = _new_version_write(
-                out, path, n_shards, id_col, order_within,
-                files_per_shard, max_rows_per_file, spark,
-                keep_versions=keep_versions,
-            )
     else:
         data_root = path
         _shard_layout_write(
@@ -1480,18 +1378,20 @@ def _compact_shards_impl(
     """Collapse a shard export's CURRENT snapshot into one fresh batch —
     the compaction half of the zero-copy append story: every
     ``mode='append'`` grows a manifest-mode shard's batch list by one
-    (readers union one more scan per live batch), and pointer-/rename-
-    mode appends accrete small files inside the live directories.
+    (readers union one more scan per live batch), and rename-mode
+    appends accrete small files inside the live directories.
     Compaction reads the current snapshot once and republishes it
     through the export's own full-rewrite path (new snapshot in
-    manifest/pointer modes — concurrent pinned readers keep the old one
-    per ``keep_versions``; tmp-and-swap in rename mode), restoring the
+    manifest mode — concurrent pinned readers keep the old one per
+    ``keep_versions``; tmp-and-swap in rename mode), restoring the
     one-batch-per-shard / ``files_per_shard`` layout without changing a
     row. Returns the refreshed verification manifest (``content_sum``
     is layout-independent, so it must equal the pre-compaction
     manifest's). Layout comes from the persisted sidecar — compaction
-    never changes a layout; ``keep_versions`` may be overridden for
-    this call (GC policy, same as :func:`merge_shards`)."""
+    never changes a layout, except that a legacy ``_v_N/`` pointer
+    export is republished as a manifest snapshot (its migration);
+    ``keep_versions`` may be overridden for this call (GC policy, same
+    as :func:`merge_shards`)."""
     path = path.rstrip("/")
     _recover_swap(path, spark)  # heal a crashed rename-mode swap first
     sidecar = _load_layout_sidecar(path, spark)
@@ -1522,14 +1422,8 @@ def _compact_shards_impl(
         _, _, bname = _publish_snapshot(
             df, path, layout, spark, "rewrite", expected=cur_ptr
         )
+        _record_manifest_layout(path, sidecar, spark)
         return _shard_manifest(spark, f"{path}/{bname}", data_cols, id_col)
-    if layout["swap_mode"] == "pointer":
-        data_root = _new_version_write(
-            df, path, layout["n_shards"], id_col, layout["order_within"],
-            layout["files_per_shard"], layout["max_rows_per_file"], spark,
-            keep_versions=layout["keep_versions"], expected=cur_ptr,
-        )
-        return _shard_manifest(spark, data_root, data_cols, id_col)
     tmp = path + ".__rewrite__"
     _delete_dir(tmp, spark)
     _shard_layout_write(
@@ -1567,6 +1461,8 @@ def _resolve_shard_layout(
     def _norm(k, v):
         if k == "order_within":
             return list(v) if v else None
+        if k == "swap_mode":
+            return _write_swap_mode(v)
         return v
 
     resolved = {}
@@ -1584,15 +1480,15 @@ def _resolve_shard_layout(
             continue
         if k == "swap_mode":
             # 'auto' defers to the stored choice; an explicit
-            # rename/pointer must match it (migrate by re-exporting)
+            # rename/manifest must match it (migrate by re-exporting)
             if v == "auto" and stored is not _UNSET:
-                resolved[k] = stored
+                resolved[k] = _norm(k, stored)
                 continue
             v = _resolve_swap_mode(v, path)
         if stored is not _UNSET and _norm(k, v) != _norm(k, stored):
             raise ValueError(
                 f"{op}: {k}={_norm(k, v)!r} contradicts the "
-                f"export's persisted layout ({k}={_norm(k, stored)!r} in "
+                f"export's persisted layout ({k}={stored!r} in "
                 f"{path}/{_LAYOUT_SIDECAR}). Layout knobs are fixed at "
                 "save_shards time; omit the argument to use the stored "
                 "value, or re-export with save_shards to change the "
@@ -1717,7 +1613,9 @@ def _merge_shards_impl(
     hazard (no eager checkpoint pinning touched-shard rows in block
     storage), crashes leave readers on the old complete snapshot, and a
     pinned reader (``read_shards(version=)``) is isolated from the
-    merge entirely.
+    merge entirely. A legacy ``_v_N/`` pointer export takes the full
+    snapshot publish and records ``manifest`` in its sidecar: its first
+    merge migrates it.
 
     Layout knobs (``n_shards``, ``id_col``, ``hash_method``,
     ``order_within``, ``files_per_shard``, ``max_rows_per_file``,
@@ -1731,8 +1629,9 @@ def _merge_shards_impl(
     spark = df_new.sparkSession
     path = path.rstrip("/")
     _recover_swap(path, spark)
+    sidecar = _load_layout_sidecar(path, spark)
     layout = _resolve_shard_layout(
-        _load_layout_sidecar(path, spark),
+        sidecar,
         {
             "n_shards": n_shards if n_shards is not None else _UNSET,
             "id_col": id_col,
@@ -1758,9 +1657,10 @@ def _merge_shards_impl(
     if is_manifest and cur_ptr is not None and cur_ptr.startswith("_m_"):
         cur_man = _load_manifest(path, cur_ptr, spark)
     if not (is_manifest and cur_man is not None):
-        # manifest-mode merges onto a NON-manifest layout (explicit
-        # swap_mode='manifest' on a legacy/pointer export = migration)
-        # read the old layout here and always publish a full snapshot
+        # manifest-mode merges onto a NON-manifest layout (a legacy _v_
+        # pointer export, or an explicit swap_mode='manifest' on a
+        # pre-sidecar one = migration) read the old layout here and
+        # always publish a full snapshot
         data_root = resolve_shards_path(path, spark)
     data_cols = list(df_new.columns)
     up = df_new.withColumn("shard", shard_col(id_col, n_shards, hash_method))
@@ -1815,6 +1715,7 @@ def _merge_shards_impl(
             _, man, bname = _publish_snapshot(
                 merged, path, layout, spark, "rewrite", expected=cur_ptr
             )
+            _record_manifest_layout(path, sidecar, spark)
             all_shards = sorted(
                 {int(s) for s in man["batches_by_shard"]} | set(affected)
             )
@@ -1834,6 +1735,7 @@ def _merge_shards_impl(
             merged, path, layout, spark, "partial", affected=affected,
             expected=cur_ptr,
         )
+        _record_manifest_layout(path, sidecar, spark)
         return _shard_manifest(
             spark, f"{path}/{bname}", data_cols, id_col, shards=affected,
             id_type=id_type,
@@ -1842,26 +1744,19 @@ def _merge_shards_impl(
         # scattered regime: rewrite the whole export through an invisible
         # sibling (streamed, nothing pinned in block-manager storage)
         merged = _apply_batch(spark.read.parquet(data_root))
-        if layout["swap_mode"] == "pointer":
-            data_root = _new_version_write(
-                merged, path, n_shards, id_col, order_within,
-                files_per_shard, max_rows_per_file, spark,
-                keep_versions=layout["keep_versions"], expected=cur_ptr,
-            )
-        else:
-            tmp = path + ".__rewrite__"
-            _delete_dir(tmp, spark)
-            _shard_layout_write(
-                merged, tmp, n_shards, id_col, order_within,
-                files_per_shard, max_rows_per_file, "overwrite",
-            )
-            # the sidecar travels inside tmp so the swap replaces data
-            # and layout record in ONE atomic rename
-            _save_layout_sidecar(
-                tmp, {"manifest_version": MANIFEST_VERSION, **layout}, spark
-            )
-            _swap_dirs(tmp, path, spark)
-            data_root = path
+        tmp = path + ".__rewrite__"
+        _delete_dir(tmp, spark)
+        _shard_layout_write(
+            merged, tmp, n_shards, id_col, order_within,
+            files_per_shard, max_rows_per_file, "overwrite",
+        )
+        # the sidecar travels inside tmp so the swap replaces data
+        # and layout record in ONE atomic rename
+        _save_layout_sidecar(
+            tmp, {"manifest_version": MANIFEST_VERSION, **layout}, spark
+        )
+        _swap_dirs(tmp, path, spark)
+        data_root = path
         # every shard was rewritten — refresh them all (file names/bytes
         # changed even where rows didn't), tombstones for emptied ones
         all_shards = sorted(

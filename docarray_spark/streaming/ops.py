@@ -534,6 +534,13 @@ def stream_merge_shards(
     express "explicitly unsorted/uncapped against a sorted/capped
     export"; re-export with save_shards for that.
 
+    ``swap_mode`` is ``'auto'``, ``'rename'`` or ``'manifest'``, checked
+    before the query starts (anything else raises ``ValueError``). A
+    legacy ``_v_N/`` pointer export migrates to manifest on its first
+    ``mode='merge'`` micro-batch, exactly as :func:`~docarray_spark.
+    sources.writers.merge_shards` does; ``mode='append'`` onto one
+    raises until it has migrated.
+
     ``mode='append'`` (manifest layout only) is the high-rate ingest
     path: each micro-batch publishes a zero-copy append snapshot
     (``manifest_scope='batch'`` — O(batch) end to end, no touched-shard
@@ -561,10 +568,12 @@ def stream_merge_shards(
         _current_pointer,
         _load_layout_sidecar,
         _load_manifest,
+        _resolve_swap_mode,
         merge_shards,
         save_shards,
     )
 
+    _resolve_swap_mode(swap_mode, path)  # reject before anything starts
     if mode not in ("merge", "append"):
         raise ValueError(
             f"stream_merge_shards: mode must be 'merge' or 'append', "

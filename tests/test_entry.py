@@ -77,11 +77,13 @@ def test_registry_fits_driver_verification_window():
         "verification window — merge entries instead"
     )
     # every entry is oracle-gated (r4: mm_image_chunks, the last
-    # rows-only entry, gained a SQL replay of its deterministic chain)
-    no_oracle_by_design: set = set()
-    oracles = entry_mod.oracle_sql()
-    missing = [n for n in names if n not in oracles and n not in no_oracle_by_design]
-    assert not missing, f"entries without an oracle: {missing}"
+    # rows-only entry, gained a SQL replay of its deterministic chain),
+    # and oracle_sql() has no key that is not an entry
+    oracles = set(entry_mod.oracle_sql())
+    assert oracles == set(names), (
+        f"entries without an oracle: {sorted(set(names) - oracles)}; "
+        f"oracles without an entry: {sorted(oracles - set(names))}"
+    )
 
 
 def test_entry_smoke(spark):

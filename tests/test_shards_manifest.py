@@ -208,22 +208,33 @@ class TestVersionPinning:
         with pytest.raises(ValueError, match="not retained"):
             read_shards(spark, path, version=1)
 
-    def test_pointer_mode_version_pin(self, spark, docs, tmp_path):
-        """version= works for v2 pointer-dir exports too (retained
-        ``_v_`` dirs are the snapshots there)."""
-        path = str(tmp_path / "pinptr")
-        save_shards(
-            docs, path, n_shards=4, id_col="doc_id",
-            swap_mode="pointer", keep_versions=2,
+    def test_pointer_mode_version_pin(
+        self, spark, docs, tmp_path, legacy_pointer_export
+    ):
+        """version= works for legacy v2 pointer-dir exports too
+        (retained ``_v_`` dirs are the snapshots there); a crashed,
+        never-flipped ``_v_`` dir newer than current is no version."""
+        import shutil
+
+        path = legacy_pointer_export(
+            str(tmp_path / "pinptr"),
+            [docs, docs.withColumn("text", F.upper("text"))], 4,
+            keep_versions=2,
         )
-        merge_shards(docs.withColumn("text", F.upper("text")), path)
+        shutil.copytree(
+            os.path.join(path, "_v_0000000001"),
+            os.path.join(path, "_v_0000000003"),
+        )
         assert shard_versions(path) == {
             "mode": "pointer", "current": 2, "versions": [1, 2],
         }
-        old = read_shards(spark, path, version=1)
-        assert old.filter(F.col("text") == F.upper("text")).count() == 0
-        with pytest.raises(ValueError, match="not retained"):
-            read_shards(spark, path, version=7)
+        for pin in (1, "_v_0000000001"):
+            old = read_shards(spark, path, version=pin)
+            assert old.count() == docs.count()
+            assert old.filter(F.col("text") == F.upper("text")).count() == 0
+        for pin in (3, 7):
+            with pytest.raises(ValueError, match="not retained"):
+                read_shards(spark, path, version=pin)
 
     def test_rename_mode_rejects_version(self, spark, docs, tmp_path):
         path = str(tmp_path / "ren")
@@ -404,44 +415,6 @@ class TestConcurrentWriters:
         )
         assert len(seqs) == len(set(seqs))  # one batch per sequence
 
-    def test_pointer_race_aborts_before_clobber(
-        self, spark, docs, tmp_path, monkeypatch
-    ):
-        """v2 pointer-dir mode: version names are deterministic (cur+1),
-        so both racers target the SAME directory — the errorifexists
-        write makes the second writer abort BEFORE touching the first's
-        published files."""
-        import docarray_spark.sources.writers as W
-
-        path = str(tmp_path / "raceptr")
-        save_shards(
-            docs, path, n_shards=4, id_col="doc_id", swap_mode="pointer",
-            keep_versions=2,
-        )
-        real = W._shard_layout_write
-        state = {"fired": False}
-
-        def interleaved(*args, **kwargs):
-            if not state["fired"]:
-                state["fired"] = True
-                merge_shards(
-                    docs.withColumn("text", F.lit("WINNER")), path,
-                    id_col="doc_id",
-                )
-            return real(*args, **kwargs)
-
-        monkeypatch.setattr(W, "_shard_layout_write", interleaved)
-        with pytest.raises(RuntimeError, match="concurrent writer"):
-            merge_shards(
-                docs.withColumn("text", F.lit("LOSER")), path,
-                id_col="doc_id",
-            )
-        monkeypatch.setattr(W, "_shard_layout_write", real)
-        back = spark.read.parquet(resolve_shards_path(path, spark))
-        assert back.count() == docs.count()
-        assert back.filter(F.col("text") == "WINNER").count() == docs.count()
-
-
 class TestReviewFindings:
     """r12 review pass over the v3/concurrency code: six findings, each
     pinned here."""
@@ -491,41 +464,6 @@ class TestReviewFindings:
         batches = [d for d in os.listdir(path) if d.startswith("_b_")]
         assert len(batches) == 2, batches
 
-    def test_stale_resolve_publish_aborts_pointer(
-        self, spark, docs, tmp_path, monkeypatch
-    ):
-        """Finding 1, pointer mode: merge_shards resolves data_root at
-        entry; a publish racing in before its _new_version_write must
-        abort it fast (before the version-dir write)."""
-        import docarray_spark.sources.writers as W
-
-        path = str(tmp_path / "staleptr")
-        save_shards(
-            docs, path, n_shards=4, id_col="doc_id", swap_mode="pointer",
-            keep_versions=2,
-        )
-        real = W._new_version_write
-        state = {"fired": False}
-
-        def interleaved(*args, **kwargs):
-            if not state["fired"]:
-                state["fired"] = True
-                merge_shards(
-                    docs.withColumn("text", F.lit("WINNER")), path,
-                    id_col="doc_id",
-                )
-            return real(*args, **kwargs)
-
-        monkeypatch.setattr(W, "_new_version_write", interleaved)
-        with pytest.raises(RuntimeError, match="resolved its input snapshot"):
-            merge_shards(
-                docs.withColumn("text", F.lit("LOSER")), path,
-                id_col="doc_id",
-            )
-        monkeypatch.setattr(W, "_new_version_write", real)
-        back = spark.read.parquet(resolve_shards_path(path, spark))
-        assert back.filter(F.col("text") == "WINNER").count() == docs.count()
-
     def test_emptied_shard_read_returns_empty_frame(
         self, spark, docs, tmp_path
     ):
@@ -550,33 +488,33 @@ class TestReviewFindings:
     ):
         """Finding 3: a crashed never-flipped attempt (newer than
         current) must not appear in shard_versions nor be pinnable —
-        in pointer mode the partial _v_ dir EXISTS on disk; serving it
-        would be silent partial data."""
+        its manifest and batch EXIST on disk; serving them would be
+        silent partial data. (The legacy ``_v_`` form is pinned in
+        TestVersionPinning::test_pointer_mode_version_pin.)"""
         import docarray_spark.sources.registry as registry
 
-        for mode in ("pointer", "manifest"):
-            path = str(tmp_path / mode)
-            save_shards(
-                docs, path, n_shards=4, id_col="doc_id", swap_mode=mode
+        path = str(tmp_path / "manifest")
+        save_shards(
+            docs, path, n_shards=4, id_col="doc_id", swap_mode="manifest"
+        )
+        orig = registry._write_text
+
+        def dying(p, text, spark=None):
+            if p.endswith("_CURRENT"):
+                raise RuntimeError("injected crash")
+            return orig(p, text, spark)
+
+        monkeypatch.setattr(registry, "_write_text", dying)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            merge_shards(
+                docs.withColumn("text", F.upper("text")), path,
+                id_col="doc_id",
             )
-            orig = registry._write_text
-
-            def dying(p, text, spark=None):
-                if p.endswith("_CURRENT"):
-                    raise RuntimeError("injected crash")
-                return orig(p, text, spark)
-
-            monkeypatch.setattr(registry, "_write_text", dying)
-            with pytest.raises(RuntimeError, match="injected crash"):
-                merge_shards(
-                    docs.withColumn("text", F.upper("text")), path,
-                    id_col="doc_id",
-                )
-            monkeypatch.setattr(registry, "_write_text", orig)
-            v = shard_versions(path)
-            assert v["current"] == 1 and v["versions"] == [1], (mode, v)
-            with pytest.raises(ValueError, match="not retained"):
-                read_shards(spark, path, version=2)
+        monkeypatch.setattr(registry, "_write_text", orig)
+        v = shard_versions(path)
+        assert v["current"] == 1 and v["versions"] == [1], v
+        with pytest.raises(ValueError, match="not retained"):
+            read_shards(spark, path, version=2)
 
     def test_string_version_pin_stale_gets_clear_error(
         self, spark, docs, tmp_path
@@ -616,12 +554,12 @@ class TestReviewFindings:
 class TestMigrationsAndAuto:
     def test_append_auto_follows_established_mode(self, spark, docs, tmp_path):
         """ADVICE r11 #1: save_shards(mode='append', swap_mode='auto')
-        on a pointer export must NOT resolve from the filesystem scheme
+        on a manifest export must NOT resolve from the filesystem scheme
         (rename on local) — it follows the stored mode, so the appended
         rows are visible behind the pointer."""
         path = str(tmp_path / "autoptr")
         save_shards(
-            docs, path, n_shards=4, id_col="doc_id", swap_mode="pointer"
+            docs, path, n_shards=4, id_col="doc_id", swap_mode="manifest"
         )
         extra = spark.createDataFrame(
             [(900001, "fresh", "en", "web", 5)], docs.schema
@@ -635,7 +573,7 @@ class TestMigrationsAndAuto:
         assert back.filter(F.col("doc_id") == 900001).count() == 1
         # sidecar NOT poisoned by the append (ADVICE r11 #2)
         sidecar = json.load(open(os.path.join(path, "_shard_layout.json")))
-        assert sidecar["swap_mode"] == "pointer"
+        assert sidecar["swap_mode"] == "manifest"
 
     def test_append_validates_layout_against_sidecar(
         self, spark, docs, tmp_path
@@ -658,7 +596,9 @@ class TestMigrationsAndAuto:
         sidecar = json.load(open(os.path.join(path, "_shard_layout.json")))
         assert sidecar["n_shards"] == 4 and sidecar["files_per_shard"] == 2
 
-    def test_overwrite_migrations_between_modes(self, spark, docs, tmp_path):
+    def test_overwrite_migrations_between_modes(
+        self, spark, docs, tmp_path, legacy_pointer_export
+    ):
         """Explicit overwrite re-exports migrate layout families cleanly
         in both directions — no stale pointer artifacts left behind."""
         path = str(tmp_path / "mig")
@@ -678,24 +618,8 @@ class TestMigrationsAndAuto:
         assert not os.path.exists(os.path.join(path, "_CURRENT"))
         assert not any(d.startswith("_b_") for d in os.listdir(path))
         assert read_shards(spark, path).count() == docs.count()
-        # manifest -> pointer (r12 self-review: the version counter must
-        # continue through _parse_seq — cur is "_m_<n>_<token>" here)
-        save_shards(
-            docs, path, n_shards=4, id_col="doc_id", swap_mode="manifest"
-        )
-        save_shards(
-            docs, path, n_shards=4, id_col="doc_id", swap_mode="pointer"
-        )
-        v = shard_versions(path)
-        assert v["mode"] == "pointer" and v["current"] >= 2
-        assert not any(d.startswith("_b_") for d in os.listdir(path))
-        assert not os.path.isdir(os.path.join(path, "_manifests"))
-        assert read_shards(spark, path).count() == docs.count()
-        # pointer -> manifest via merge (full rewrite migrates)
-        p2 = str(tmp_path / "mig2")
-        save_shards(
-            docs, p2, n_shards=4, id_col="doc_id", swap_mode="pointer"
-        )
+        # legacy pointer -> manifest via merge (full rewrite migrates)
+        p2 = legacy_pointer_export(str(tmp_path / "mig2"), [docs], 4)
         os.remove(os.path.join(p2, "_shard_layout.json"))  # pre-sidecar
         merge_shards(
             docs.withColumn("text", F.upper("text")), p2, n_shards=4,
@@ -762,27 +686,26 @@ class TestCompaction:
         )
 
     def test_compact_pointer_and_rename_modes(self, spark, docs, tmp_path):
-        """Compaction works on all three layouts: pointer appends into
-        the live version dir and rename appends at the root both
-        collapse back to the files_per_shard contract."""
+        """Compaction works on the rename layout too: appends at the
+        root collapse back to the files_per_shard contract. (Compacting
+        a legacy pointer export migrates it — test_shards_pointer.py::
+        TestPointerMode::test_manifest_matches_rename_mode.)"""
         from docarray_spark.sources import compact_shards
         from docarray_spark.sources.writers import _shard_sizes
 
-        for mode in ("pointer", "rename"):
-            path = str(tmp_path / mode)
-            save_shards(
-                docs, path, n_shards=4, id_col="doc_id", swap_mode=mode
-            )
-            extra = spark.createDataFrame(
-                [(900001, "fresh", "en", "web", 5)], docs.schema
-            )
-            save_shards(extra, path, mode="append")
-            m = compact_shards(spark, path).toPandas()
-            assert m.rows.sum() == docs.count() + 1
-            data_root = resolve_shards_path(path, spark)
-            sizes = _shard_sizes(data_root, spark)
-            assert all(v[0] == 1 for v in sizes.values())  # 1 file/shard
-            assert read_shards(spark, path).count() == docs.count() + 1
+        path = str(tmp_path / "rename")
+        save_shards(
+            docs, path, n_shards=4, id_col="doc_id", swap_mode="rename"
+        )
+        extra = spark.createDataFrame(
+            [(900001, "fresh", "en", "web", 5)], docs.schema
+        )
+        save_shards(extra, path, mode="append")
+        m = compact_shards(spark, path).toPandas()
+        assert m.rows.sum() == docs.count() + 1
+        sizes = _shard_sizes(resolve_shards_path(path, spark), spark)
+        assert all(v[0] == 1 for v in sizes.values())  # 1 file/shard
+        assert read_shards(spark, path).count() == docs.count() + 1
 
     def test_compact_requires_sidecar_and_keeps_layout(
         self, spark, docs, tmp_path
@@ -930,7 +853,7 @@ class TestCompactAt:
             )
         p2 = str(tmp_path / "v2")
         save_shards(
-            docs, p2, n_shards=4, id_col="doc_id", swap_mode="pointer"
+            docs, p2, n_shards=4, id_col="doc_id", swap_mode="rename"
         )
         with pytest.raises(ValueError, match="compact_at applies only"):
             save_shards(docs.limit(2), p2, mode="append", compact_at=2)
@@ -1011,7 +934,7 @@ class TestManifestScope:
             )
         p2 = str(tmp_path / "ms2")
         save_shards(
-            docs, p2, n_shards=4, id_col="doc_id", swap_mode="pointer"
+            docs, p2, n_shards=4, id_col="doc_id", swap_mode="rename"
         )
         with pytest.raises(ValueError, match="manifest_scope='batch' applies"):
             save_shards(
@@ -1323,32 +1246,31 @@ class TestReviewFindingsR12b:
         self, spark, docs, tmp_path
     ):
         """Finding 7: Spark's errorifexists/ignore writer contract holds
-        on manifest and pointer layouts — no silent full rewrite."""
-        for swap in ("manifest", "pointer"):
-            path = str(tmp_path / f"mode_{swap}")
+        on the manifest layout — no silent full rewrite."""
+        path = str(tmp_path / "mode_manifest")
+        save_shards(
+            docs, path, n_shards=4, id_col="doc_id", swap_mode="manifest"
+        )
+        v_before = shard_versions(path)["current"]
+        with pytest.raises(ValueError, match="already exists"):
             save_shards(
-                docs, path, n_shards=4, id_col="doc_id", swap_mode=swap
-            )
-            v_before = shard_versions(path)["current"]
-            with pytest.raises(ValueError, match="already exists"):
-                save_shards(
-                    docs.limit(3), path, n_shards=4, id_col="doc_id",
-                    swap_mode=swap, mode="error",
-                )
-            m = save_shards(
                 docs.limit(3), path, n_shards=4, id_col="doc_id",
-                swap_mode=swap, mode="ignore",
-            ).toPandas()
-            assert m.rows.sum() == docs.count()  # current corpus, no-op
-            assert shard_versions(path)["current"] == v_before
-            assert read_shards(spark, path).count() == docs.count()
-            # fresh target: both behave like a first write
-            p2 = str(tmp_path / f"fresh_{swap}")
-            save_shards(
-                docs.limit(5), p2, n_shards=2, id_col="doc_id",
-                swap_mode=swap, mode="error",
+                swap_mode="manifest", mode="error",
             )
-            assert read_shards(spark, p2).count() == 5
+        m = save_shards(
+            docs.limit(3), path, n_shards=4, id_col="doc_id",
+            swap_mode="manifest", mode="ignore",
+        ).toPandas()
+        assert m.rows.sum() == docs.count()  # current corpus, no-op
+        assert shard_versions(path)["current"] == v_before
+        assert read_shards(spark, path).count() == docs.count()
+        # fresh target: both behave like a first write
+        p2 = str(tmp_path / "fresh_manifest")
+        save_shards(
+            docs.limit(5), p2, n_shards=2, id_col="doc_id",
+            swap_mode="manifest", mode="error",
+        )
+        assert read_shards(spark, p2).count() == 5
 
 
 class TestOptimisticRetry:

@@ -5,9 +5,13 @@ random walk applies the full mutation surface — merge upserts, deletes,
 zero-copy appends, compaction, full re-export — against each
 ``swap_mode`` and asserts after EVERY step that ``read_shards`` returns
 exactly the model, that the persisted ``shard`` column still matches the
-deterministic hash assignment, and (pointer/manifest modes, under
+deterministic hash assignment, and (manifest mode, under
 ``keep_versions=2``) that the previous published snapshot, pinned by
 version, still serves the rows the model held when it was current.
+The ``pointer`` walk starts from a hand-built legacy v2 pointer export
+(``_v_N/`` dirs, no longer written): appends are refused until a merge,
+compaction or overwrite migrates it, and from then on it walks as a
+manifest export.
 
 Single-op behaviors are pinned in test_shards{,_pointer,_manifest}.py;
 this file pins the COMPOSITIONS — e.g. append-after-partial-merge onto a
@@ -55,7 +59,9 @@ class TestModelWalk:
         "mode,seed",
         [("rename", 7), ("pointer", 7), ("manifest", 7), ("manifest", 23)],
     )
-    def test_random_walk_matches_model(self, spark, tmp_path, mode, seed):
+    def test_random_walk_matches_model(
+        self, spark, tmp_path, mode, seed, legacy_pointer_export
+    ):
         rng = random.Random(seed)
         path = str(tmp_path / f"walk_{mode}_{seed}")
         model: dict[int, str] = {}
@@ -73,10 +79,17 @@ class TestModelWalk:
 
         init = [(i, f"t{i}") for i in fresh_ids(40)]
         model.update(init)
-        save_shards(
-            _df(spark, init), path, n_shards=N_SHARDS, id_col="doc_id",
-            swap_mode=mode, keep_versions=KEEP,
-        )
+        # the legacy walk writes manifest snapshots once it has migrated
+        write_mode = "manifest" if mode == "pointer" else mode
+        if mode == "pointer":
+            legacy_pointer_export(
+                path, [_df(spark, init)], N_SHARDS, keep_versions=KEEP
+            )
+        else:
+            save_shards(
+                _df(spark, init), path, n_shards=N_SHARDS, id_col="doc_id",
+                swap_mode=mode, keep_versions=KEEP,
+            )
         # (version after publish, model at that instant)
         history = [(version_now(), dict(model))]
 
@@ -120,6 +133,10 @@ class TestModelWalk:
                 )
             elif op == "append":
                 pairs = [(i, f"a{step}_{i}") for i in fresh_ids(rng.randint(1, 6))]
+                if shard_versions(path)["mode"] == "pointer":
+                    with pytest.raises(ValueError, match="layout migration"):
+                        save_shards(_df(spark, pairs), path, mode="append")
+                    continue
                 model.update(pairs)
                 save_shards(_df(spark, pairs), path, mode="append")
             elif op == "compact":
@@ -133,17 +150,16 @@ class TestModelWalk:
                 )
                 save_shards(
                     _df(spark, sorted(model.items())), path,
-                    n_shards=N_SHARDS, id_col="doc_id", swap_mode=mode,
+                    n_shards=N_SHARDS, id_col="doc_id", swap_mode=write_mode,
                     keep_versions=KEEP,
                 )
             history.append((version_now(), dict(model)))
             check()
             # snapshot pinning: when this step PUBLISHED a new version,
             # the previous one (retained at keep_versions=2) must still
-            # serve the model as of its own publish — pointer-mode
-            # in-place mutations (append / partial merge) don't bump the
-            # version, so the pin check self-skips for them, matching
-            # the documented isolation contract of each layout
+            # serve the model as of its own publish (the legacy _v_ dir
+            # is not on the first manifest's lineage, so the migrating
+            # step self-skips)
             prev_v, prev_model = history[-2]
             cur_v = history[-1][0]
             if prev_v is not None and prev_v != cur_v:

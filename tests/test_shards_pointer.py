@@ -1,15 +1,17 @@
-"""Round-11 shard-export hardening (VERDICT/ADVICE r10).
+"""Round-11 shard-export hardening (VERDICT/ADVICE r10), and the legacy
+format-v2 pointer layout.
 
-Object-store-safe full-rewrite swap: a versioned export directory behind
-an atomically-flipped one-line ``_CURRENT`` pointer file (the same
-sidecar discipline the index stores use) instead of a directory
-rename-pair — on S3A/GCS a directory rename is a non-atomic O(data)
-copy+delete with an hours-long half-renamed window at 100 TB, while a
-one-object pointer PUT is atomic everywhere. Plus: crash recovery for
-the rename-mode swap, layout knobs persisted in a ``_shard_layout.json``
-sidecar (a forgetful merge can no longer collapse a multi-file export),
-and an integer full-rewrite threshold (float multiply flips the route at
-exact fractional thresholds).
+Crash recovery for the rename-mode swap, layout knobs persisted in a
+``_shard_layout.json`` sidecar (a forgetful merge can no longer collapse
+a multi-file export), and an integer full-rewrite threshold (float
+multiply flips the route at exact fractional thresholds).
+
+Pointer exports (hidden ``_v_N/`` version dirs behind a one-line
+``_CURRENT`` file) are no longer written — ``swap_mode`` is
+``auto|rename|manifest``, one publish protocol per filesystem kind —
+but existing ones still read, pin and list as before, and their first
+merge or compaction migrates them to the manifest layout. Those tests
+build the legacy layout by hand (the ``legacy_pointer_export`` fixture).
 """
 
 import json
@@ -19,10 +21,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from docarray_spark.sources import (
+    compact_shards,
     merge_shards,
+    read_shards,
     resolve_shards_path,
     save_shards,
     shard_col,
+    shard_versions,
 )
 
 
@@ -40,110 +45,153 @@ def docs(spark, sf_dir):
 N = 8
 
 
+def _rows(df, cols):
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def _files(root):
+    """{relative path: (size, mtime)} of every file under root."""
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            st = os.stat(os.path.join(d, n))
+            out[os.path.relpath(os.path.join(d, n), root)] = (
+                st.st_size, st.st_mtime_ns,
+            )
+    return out
+
+
 class TestPointerMode:
+    """Legacy pointer exports, built by hand: a retained
+    ``_v_0000000001/`` (the corpus) under the current
+    ``_v_0000000002/`` (its text upper-cased)."""
+
     @pytest.fixture()
-    def store(self, docs, tmp_path):
+    def store(self, docs, tmp_path, legacy_pointer_export):
         path = str(tmp_path / "ptr")
-        m = save_shards(
-            docs, path, n_shards=N, id_col="doc_id",
-            order_within=["doc_id"], swap_mode="pointer",
-        )
-        return path, m.toPandas()
+        upper = docs.withColumn("text", F.upper("text"))
+        return legacy_pointer_export(path, [docs, upper], N), upper
+
+    @staticmethod
+    def _assert_migrated(path):
+        assert open(os.path.join(path, "_CURRENT")).read().startswith("_m_")
+        sidecar = json.load(open(os.path.join(path, "_shard_layout.json")))
+        assert sidecar["swap_mode"] == "manifest"
+        assert sidecar["manifest_version"] == 3
+        assert not any(d.startswith("_v_") for d in os.listdir(path))
 
     def test_save_layout_and_resolve(self, spark, docs, store):
-        path, m = store
-        # pointer + sidecar at the root, data in a hidden version dir
-        assert open(os.path.join(path, "_CURRENT")).read() == "_v_0000000001"
-        data_root = resolve_shards_path(path, spark)
-        assert data_root == os.path.join(path, "_v_0000000001")
-        assert not any(
-            d.startswith("shard=") for d in os.listdir(path)
-        )  # nothing visible at the root — readers MUST resolve
-        back = spark.read.parquet(data_root).drop("shard")
-        a = docs.toPandas().sort_values("doc_id", ignore_index=True)
-        b = back.toPandas()[a.columns.tolist()].sort_values(
-            "doc_id", ignore_index=True
+        """The v2 layout reads as it always did: readers resolve
+        ``_CURRENT`` to the live version dir, shard pruning reaches the
+        scan, and both published versions are listed."""
+        from docarray_spark.plans.audit import partition_filters
+
+        path, upper = store
+        assert resolve_shards_path(path, spark) == os.path.join(
+            path, "_v_0000000002"
         )
-        assert a.equals(b)
-        sidecar = json.load(open(os.path.join(path, "_shard_layout.json")))
-        assert sidecar["swap_mode"] == "pointer"
-        assert sidecar["n_shards"] == N
-        assert sidecar["manifest_version"] == 2
+        assert _rows(read_shards(spark, path), docs.columns) == _rows(
+            upper, docs.columns
+        )
+        pruned = read_shards(spark, path, shards=[1, 2])
+        want = docs.select(
+            shard_col("doc_id", N).alias("s")
+        ).filter(F.col("s").isin([1, 2])).count()
+        assert pruned.count() == want
+        assert partition_filters(pruned)
+        assert shard_versions(path) == {
+            "mode": "pointer", "current": 2, "versions": [1, 2],
+        }
 
     def test_manifest_matches_rename_mode(self, spark, docs, store, tmp_path):
-        """content_sum/rows are swap-layout independent: the pointer-mode
-        manifest equals the rename-mode manifest of the same corpus."""
-        path, m_ptr = store
-        other = str(tmp_path / "ren")
+        """content_sum/rows are swap-layout independent: compacting a
+        legacy export migrates it to a manifest snapshot whose manifest
+        equals the rename-mode export of the same rows."""
+        path, upper = store
+        m = compact_shards(spark, path).toPandas()
         m_ren = save_shards(
-            docs, other, n_shards=N, id_col="doc_id",
-            order_within=["doc_id"], swap_mode="rename",
+            upper, str(tmp_path / "ren"), n_shards=N, id_col="doc_id",
+            swap_mode="rename",
         ).toPandas()
         cols = ["shard", "rows", "id_min", "id_max", "content_sum"]
-        assert m_ptr[cols].reset_index(drop=True).equals(
+        assert m[cols].reset_index(drop=True).equals(
             m_ren[cols].reset_index(drop=True)
         )
+        self._assert_migrated(path)
+        assert _rows(read_shards(spark, path), docs.columns) == _rows(
+            upper, docs.columns
+        )
 
-    def test_full_rewrite_flips_version(self, spark, docs, store):
-        path, _ = store
-        batch = docs.withColumn("text", F.upper("text"))  # touches all
-        m = merge_shards(batch, path, id_col="doc_id").toPandas()
-        assert len(m) == N
-        assert open(os.path.join(path, "_CURRENT")).read() == "_v_0000000002"
-        assert not os.path.isdir(os.path.join(path, "_v_0000000001"))  # GC'd
-        back = spark.read.parquet(resolve_shards_path(path, spark))
-        assert back.count() == docs.count()
-        assert back.filter(F.col("text") != F.upper("text")).count() == 0
-
-    def test_cow_merge_stays_in_version(self, spark, docs, store):
-        path, _ = store
-        data_root = resolve_shards_path(path, spark)
+    def test_merge_migrates_to_manifest(self, spark, docs, store):
+        """A partial merge publishes a full manifest snapshot of the
+        merged rows and records the new layout, so the next append is a
+        zero-copy manifest append."""
+        path, upper = store
         batch = docs.filter(F.col("doc_id") < 5).withColumn(
             "text", F.lit("UPDATED")
         )
-        m = merge_shards(batch, path, id_col="doc_id").toPandas()
-        assert 0 < len(m) < N  # touched shards only — COW route
-        # no version bump: rewritten in place inside the current version
-        assert resolve_shards_path(path, spark) == data_root
-        back = spark.read.parquet(data_root)
-        assert back.count() == docs.count()
-        assert back.filter(F.col("text") == "UPDATED").count() == 5
+        m = merge_shards(batch, path).toPandas()
+        assert len(m) == N  # every shard is in the migrated snapshot
+        want = upper.withColumn(
+            "text",
+            F.when(F.col("doc_id") < 5, "UPDATED").otherwise(F.col("text")),
+        )
+        assert _rows(read_shards(spark, path), docs.columns) == _rows(
+            want, docs.columns
+        )
+        self._assert_migrated(path)
+        pre = _files(path)
+        extra = spark.createDataFrame(
+            [(900001, "fresh", "en", "web", 5)], docs.schema
+        )
+        save_shards(extra, path, mode="append")
+        post = _files(path)
+        assert all(
+            post[p] == st for p, st in pre.items() if p.endswith(".parquet")
+        )
+        assert read_shards(spark, path).count() == docs.count() + 1
 
-    def test_crash_between_write_and_flip_serves_old(
-        self, spark, docs, store, monkeypatch
-    ):
-        """THE pointer-mode guarantee: a death after the new version dir
-        is fully written but before the pointer flip leaves readers on
-        the old, complete version — and the next rewrite GCs the stale
-        partial and succeeds."""
-        import docarray_spark.sources.registry as registry
+    def test_append_raises_and_writes_nothing(self, spark, docs, store):
+        """An append onto an un-migrated export would publish a snapshot
+        of only the new rows and GC the version dirs — it raises before
+        writing, also when the sidecar already says manifest (an
+        overwrite migration that died before its pointer flip). The
+        overwrite the error points to then migrates the export."""
+        path, upper = store
+        extra = spark.createDataFrame(
+            [(900001, "fresh", "en", "web", 5)], docs.schema
+        )
+        pre = _files(path)
+        with pytest.raises(ValueError, match="layout migration goes through"):
+            save_shards(extra, path, mode="append")
+        assert _files(path) == pre
+        sc_path = os.path.join(path, "_shard_layout.json")
+        sidecar = json.load(open(sc_path))
+        json.dump({**sidecar, "swap_mode": "manifest"}, open(sc_path, "w"))
+        pre = _files(path)
+        with pytest.raises(ValueError, match="not a manifest"):
+            save_shards(extra, path, mode="append")
+        assert _files(path) == pre
+        assert _rows(read_shards(spark, path), docs.columns) == _rows(
+            upper, docs.columns
+        )
+        save_shards(docs, path, n_shards=N, id_col="doc_id")
+        self._assert_migrated(path)
+        assert _rows(read_shards(spark, path), docs.columns) == _rows(
+            docs, docs.columns
+        )
 
-        path, _ = store
-        orig = registry._write_text
+    def test_pointer_swap_mode_rejected(self, spark, docs, tmp_path):
+        from docarray_spark.streaming import stream_merge_shards
 
-        def dying(p, text, spark=None):
-            if p.endswith("_CURRENT"):
-                raise RuntimeError("injected crash before pointer flip")
-            return orig(p, text, spark)
-
-        monkeypatch.setattr(registry, "_write_text", dying)
-        batch = docs.withColumn("text", F.upper("text"))
-        with pytest.raises(RuntimeError, match="injected crash"):
-            merge_shards(batch, path, id_col="doc_id")
-        # old version still served, old data intact
-        assert resolve_shards_path(path, spark).endswith("_v_0000000001")
-        back = spark.read.parquet(resolve_shards_path(path, spark))
-        assert back.count() == docs.count()
-        assert back.filter(F.col("text") == F.upper("text")).count() == 0
-        # stale never-published version dir survives the crash ...
-        assert os.path.isdir(os.path.join(path, "_v_0000000002"))
-        monkeypatch.setattr(registry, "_write_text", orig)
-        # ... and the re-run merge GCs it, publishes, and reads flip over
-        m = merge_shards(batch, path, id_col="doc_id").toPandas()
-        assert len(m) == N
-        assert resolve_shards_path(path, spark).endswith("_v_0000000002")
-        back = spark.read.parquet(resolve_shards_path(path, spark))
-        assert back.filter(F.col("text") != F.upper("text")).count() == 0
+        target = str(tmp_path / "never")
+        for call in (save_shards, merge_shards):
+            with pytest.raises(ValueError, match=r"auto\|rename\|manifest"):
+                call(docs, target, n_shards=4, id_col="doc_id",
+                     swap_mode="pointer")
+        with pytest.raises(ValueError, match=r"auto\|rename\|manifest"):
+            stream_merge_shards(None, target, n_shards=4, swap_mode="pointer")
+        assert not os.path.exists(target)
 
 
 class TestRenameCrashRecovery:
@@ -304,9 +352,8 @@ class TestReadShards:
         shard filter landing in PartitionFilters (a dataloader rank
         scans only its own shard=N dirs)."""
         from docarray_spark.plans.audit import partition_filters
-        from docarray_spark.sources import read_shards
 
-        for mode in ("rename", "pointer"):
+        for mode in ("rename", "manifest"):
             path = str(tmp_path / mode)
             save_shards(
                 docs, path, n_shards=4, id_col="doc_id", swap_mode=mode
@@ -323,61 +370,30 @@ class TestReadShards:
 
 
 class TestVersionRetention:
-    def test_keep_versions_holds_previous_snapshot(
-        self, spark, docs, tmp_path
-    ):
-        """Snapshot retention (r11 self-review): keep_versions=2 holds
-        the superseded version through one rewrite cycle so an
-        epoch-long reader that resolved the pointer pre-rewrite keeps
-        its files; the next rewrite GCs it."""
-        path = str(tmp_path / "kv")
-        save_shards(
-            docs, path, n_shards=4, id_col="doc_id",
-            swap_mode="pointer", keep_versions=2,
-        )
-        v = lambda n: os.path.join(path, f"_v_{n:010d}")  # noqa: E731
-        merge_shards(
-            docs.withColumn("text", F.upper("text")), path
-        )  # full rewrite -> v2; v1 retained under keep_versions=2
-        assert os.path.isdir(v(1)) and os.path.isdir(v(2))
-        assert resolve_shards_path(path, spark).endswith("_v_0000000002")
-        merge_shards(
-            docs.withColumn("text", F.lower("text")), path
-        )  # -> v3; v2 retained, v1 GC'd
-        assert not os.path.isdir(v(1))
-        assert os.path.isdir(v(2)) and os.path.isdir(v(3))
-        assert resolve_shards_path(path, spark).endswith("_v_0000000003")
-        # the retained snapshot is COMPLETE (an in-flight reader's view)
-        old = spark.read.parquet(v(2))
-        assert old.count() == docs.count()
-        json_path = os.path.join(path, "_shard_layout.json")
-        assert json.load(open(json_path))["keep_versions"] == 2
-
     def test_append_pointer_onto_legacy_layout_raises(
         self, spark, docs, tmp_path
     ):
-        """r11 self-review: append+pointer onto a rename-layout export
-        would publish a version holding ONLY the appended rows and GC
-        the legacy shard dirs — silent data loss. Must raise. Since r12
-        save_shards append validates against the sidecar exactly like
-        merge_shards (ADVICE r11 #2), so the contradiction check fires
-        first; the root-dir migration guard still backstops sidecar-less
-        legacy exports."""
+        """r11 self-review: a snapshot-layout append onto a rename-layout
+        export would publish a snapshot holding ONLY the appended rows
+        and GC the legacy shard dirs — silent data loss. Must raise.
+        Since r12 save_shards append validates against the sidecar
+        exactly like merge_shards (ADVICE r11 #2), so the contradiction
+        check fires first; the root-dir migration guard still backstops
+        sidecar-less legacy exports."""
         path = str(tmp_path / "legacyappend")
         save_shards(docs, path, n_shards=4, id_col="doc_id")  # rename
         with pytest.raises(ValueError, match="contradicts the export"):
             save_shards(
                 docs, path, n_shards=4, id_col="doc_id",
-                mode="append", swap_mode="pointer",
+                mode="append", swap_mode="manifest",
             )
         # pre-sidecar legacy export: the root shard-dir guard backstops
         os.remove(os.path.join(path, "_shard_layout.json"))
-        for swap in ("pointer", "manifest"):
-            with pytest.raises(ValueError, match="cannot migrate"):
-                save_shards(
-                    docs, path, n_shards=4, id_col="doc_id",
-                    mode="append", swap_mode=swap,
-                )
+        with pytest.raises(ValueError, match="cannot migrate"):
+            save_shards(
+                docs, path, n_shards=4, id_col="doc_id",
+                mode="append", swap_mode="manifest",
+            )
         # the export is untouched
         assert spark.read.parquet(path).count() == docs.count()
 
@@ -390,12 +406,11 @@ class TestVersionRetention:
         path = str(tmp_path / "kvov")
         save_shards(
             docs, path, n_shards=4, id_col="doc_id",
-            swap_mode="pointer", keep_versions=1,
+            swap_mode="manifest", keep_versions=1,
         )
         merge_shards(
             docs.withColumn("text", F.upper("text")), path, keep_versions=2
         )
-        v = lambda n: os.path.join(path, f"_v_{n:010d}")  # noqa: E731
-        assert os.path.isdir(v(1)) and os.path.isdir(v(2))  # retained
+        assert shard_versions(path)["versions"] == [1, 2]  # retained
         sidecar = json.load(open(os.path.join(path, "_shard_layout.json")))
         assert sidecar["keep_versions"] == 1  # stored default unchanged
