@@ -50,6 +50,16 @@ from docarray_spark.queryset import find
 from docarray_spark.sources import read_table as _t
 
 
+def _submit(pool, fn, *args, **kwargs):
+    """``pool.submit`` for Spark work: the thread runs ``fn`` under the
+    caller's local properties (job group, job description) and session
+    tags, so the jobs it starts are attributed to the calling entry."""
+    from pyspark.util import inheritable_thread_target
+
+    target = inheritable_thread_target(SparkSession.active())(fn)
+    return pool.submit(target, *args, **kwargs)
+
+
 # ---------------------------------------------------------------- filter QL
 
 def q_ql_filter_range(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -575,11 +585,11 @@ def q_text_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     all_queries = dict(HYBRID_QUERIES)
     all_queries[-1] = "key value scan table"
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_tr = pool.submit(
-            text_search_multi, dtext, all_queries,
+        f_tr = _submit(
+            pool, text_search_multi, dtext, all_queries,
             id_col="doc_id", k=40, round_to=6,
         )
-        f_vec40 = pool.submit(_knn)
+        f_vec40 = _submit(pool, _knn)
         tr_all, vec40 = f_tr.result(), f_vec40.result()
     single = tr_all.filter((F.col("query_id") == -1) & (F.col("rank") <= 20))
     tr40 = tr_all.filter(F.col("query_id") >= 0)
@@ -1627,7 +1637,7 @@ def q_dedup_embedding_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=3) as pool:
-        f_ab, f_c, f_d = pool.submit(_ab), pool.submit(_c), pool.submit(_d)
+        f_ab, f_c, f_d = _submit(pool, _ab), _submit(pool, _c), _submit(pool, _d)
         ab, c, d = f_ab.result(), f_c.result(), f_d.result()
     # keep rides as INT: a null BOOLEAN stringifies engine-dependently
     # (None vs NaN) while null numerics agree — hash-safe like the other
@@ -1686,7 +1696,7 @@ def q_dedup_text_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_m, f_e = pool.submit(_m), pool.submit(_e)
+        f_m, f_e = _submit(pool, _m), _submit(pool, _e)
         m, e = f_m.result(), f_e.result()
     return m.unionByName(e)
 
@@ -1816,8 +1826,8 @@ def q_stream_counts_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     _events_stream(spark, sf_dir)  # materialize the landing once
     with _stream_partitions(spark):
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fw = pool.submit(q_stream_windowed_counts, spark, sf_dir)
-            fd = pool.submit(q_stream_dedup_keys, spark, sf_dir)
+            fw = _submit(pool, q_stream_windowed_counts, spark, sf_dir)
+            fd = _submit(pool, q_stream_dedup_keys, spark, sf_dir)
             wdf, ddf = fw.result(), fd.result()
     w = wdf.select(
         F.lit("window").alias("part"),

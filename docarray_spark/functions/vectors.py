@@ -16,6 +16,10 @@ invalid row means is the caller's: not a candidate (match, knn_graph,
 IVF, PQ, SQ, HNSW), cell -1 (assignment), NULL (pair distance, LSH
 signatures) — the same outcome a NULL row gets at that site.
 
+The driver-side query batch of the broadcast-query operators (``match``,
+vectorized ``ivf_match``, PQ/SQ/IVF-PQ, HNSW) crosses the same boundary
+through :func:`collect_queries`, which raises on an invalid query row.
+
 float32 → float64 promotion is exact, so the matrix holds the column's
 values bit for bit and the kernels' results match the Column-fold forms
 and the SQL oracles.
@@ -60,6 +64,36 @@ def as_matrix(values, dim: int | None = None) -> tuple[np.ndarray, np.ndarray]:
     X = np.zeros((n, dim))
     X[valid] = flat[(off[:-1][valid] - off[0])[:, None] + np.arange(dim)]
     return X, valid
+
+
+def collect_queries(
+    queries, id_col: str, on: str, max_rows: int, op: str
+) -> tuple[list, np.ndarray]:
+    """``(qids, qmat)``: the driver-side query batch that ``op`` broadcasts.
+
+    Rows with a NULL id or vector are dropped; at most ``max_rows + 1``
+    rows are collected (through Arrow, converted by :func:`as_matrix`), so
+    an unbounded query side fails fast instead of filling the driver. A
+    query vector with a NULL element, or one whose length differs from the
+    first row's, raises naming up to 5 such query ids."""
+    table = queries.select(id_col, on).dropna().limit(max_rows + 1).toArrow()
+    if table.num_rows == 0:
+        raise ValueError(f"{op}: queries side is empty")
+    if table.num_rows > max_rows:
+        raise ValueError(
+            f"{op} broadcasts the query side (> {max_rows} rows found); use "
+            "knn_graph for unbounded corpus-vs-corpus kNN, or raise "
+            "max_query_rows explicitly if the driver can hold it"
+        )
+    qids = table.column(0).to_pylist()
+    qmat, valid = as_matrix(table.column(1))
+    if not valid.all():
+        bad = [qids[i] for i in np.flatnonzero(~valid)[:5]]
+        raise ValueError(
+            f"{op}: query vectors must have no NULL element and one length "
+            f"({qmat.shape[1]}); offending query ids: {bad}"
+        )
+    return qids, qmat
 
 
 def unit_rows(X: np.ndarray) -> np.ndarray:

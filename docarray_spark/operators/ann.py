@@ -35,7 +35,7 @@ from docarray_spark.functions.distance import (
     topk_keep,
 )
 from docarray_spark.functions.lsh import signatures_udf
-from docarray_spark.functions.vectors import as_matrix
+from docarray_spark.functions.vectors import as_matrix, collect_queries
 
 _PAIR_DIST = {
     "cosine": cosine_distance_col,
@@ -306,17 +306,9 @@ def _ivf_match_vectorized(
         raise ValueError(f"ivf_match supports {sorted(_PAIR_DIST)}, got {metric!r}")
     base = corpus.select(F.col(corpus_id_col).alias("id"), F.col(emb_col).alias("v"))
     cmat = np.asarray([v for _, v in _ivf_centroids(base, n_cells, centroids)])
-    qrows = (
-        queries.select(query_id_col, emb_col).dropna().limit(max_query_rows + 1).collect()
+    qids, qmat = collect_queries(
+        queries, query_id_col, emb_col, max_query_rows, "ivf_match"
     )
-    if not qrows:
-        raise ValueError("queries side is empty")
-    if len(qrows) > max_query_rows:
-        raise ValueError(
-            f"ivf_match broadcasts the query side (> {max_query_rows} rows)"
-        )
-    qids = [r[0] for r in qrows]
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
     # probe selection mirrors the SQL window — the fold's sqeuclidean asc,
     # then cell asc (centroids are cell-sorted, so a stable sort on the
     # dimension-order distances is exactly that order)

@@ -39,7 +39,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from docarray_spark.functions.hnsw import HNSWIndex
-from docarray_spark.functions.vectors import as_matrix, unit_rows
+from docarray_spark.functions.vectors import as_matrix, collect_queries, unit_rows
 
 _MAX_QUERY_ROWS = 65536
 _METRICS = ("sqeuclidean", "euclidean", "cosine")
@@ -98,20 +98,9 @@ def hnsw_match(
 
         corpus = corpus.filter(compile_filter(corpus, filter))
     query_emb_col = query_emb_col or emb_col
-    qrows = (
-        queries.select(query_id_col, query_emb_col)
-        .dropna()
-        .limit(max_query_rows + 1)
-        .collect()
+    qids, qmat = collect_queries(
+        queries, query_id_col, query_emb_col, max_query_rows, "hnsw_match"
     )
-    if not qrows:
-        raise ValueError("queries side is empty")
-    if len(qrows) > max_query_rows:
-        raise ValueError(
-            f"hnsw_match broadcasts the query side (> {max_query_rows} rows)"
-        )
-    qids = [r[0] for r in qrows]
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
     if metric == "cosine":
         qmat = unit_rows(qmat)
 
@@ -273,20 +262,9 @@ def hnsw_match_stored(
             f"queried with {metric!r}"
         )
     id_type = meta[0].id_type
-    qrows = (
-        queries.select(query_id_col, query_emb_col)
-        .dropna()
-        .limit(max_query_rows + 1)
-        .collect()
+    qids, qmat = collect_queries(
+        queries, query_id_col, query_emb_col, max_query_rows, "hnsw_match_stored"
     )
-    if not qrows:
-        raise ValueError("queries side is empty")
-    if len(qrows) > max_query_rows:
-        raise ValueError(
-            f"hnsw_match_stored broadcasts the query side (> {max_query_rows} rows)"
-        )
-    qids = [r[0] for r in qrows]
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
     if metric == "cosine":
         qmat = unit_rows(qmat)
     allow, sel = None, 1.0

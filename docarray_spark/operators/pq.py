@@ -45,7 +45,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from docarray_spark.functions.distance import grouped_topk_keep, topk_keep
-from docarray_spark.functions.vectors import as_matrix
+from docarray_spark.functions.vectors import as_matrix, collect_queries
 
 _MAX_TRAIN_SAMPLE = 262144  # driver-collect budget (same stance as match())
 _MAX_QUERY_ROWS = 65536
@@ -284,20 +284,9 @@ def pq_match(
             corpus_id_col, query_id_col, query_emb_col, rerank_emb_col,
             round_scores,
         )
-    qrows = (
-        queries.select(query_id_col, query_emb_col)
-        .dropna()
-        .limit(max_query_rows + 1)
-        .collect()
+    qids, qmat = collect_queries(
+        queries, query_id_col, query_emb_col, max_query_rows, "pq_match"
     )
-    if not qrows:
-        raise ValueError("queries side is empty")
-    if len(qrows) > max_query_rows:
-        raise ValueError(
-            f"pq_match broadcasts the query side (> {max_query_rows} rows)"
-        )
-    qids = [r[0] for r in qrows]
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
     m = len(codebooks)
     dim = sum(len(b[0]) for b in codebooks)
     bounds = _subspace_bounds(dim, m)
@@ -525,20 +514,9 @@ def ivfpq_match(
             assigned, codebooks, id_col="id", emb_col="v", keep_cols=["cell"]
         )
 
-    qrows = (
-        queries.select(query_id_col, emb_col)
-        .dropna()
-        .limit(max_query_rows + 1)
-        .collect()
+    qids, qmat = collect_queries(
+        queries, query_id_col, emb_col, max_query_rows, "ivfpq_match"
     )
-    if not qrows:
-        raise ValueError("queries side is empty")
-    if len(qrows) > max_query_rows:
-        raise ValueError(
-            f"ivfpq_match broadcasts the query side (> {max_query_rows} rows)"
-        )
-    qids = [r[0] for r in qrows]
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
     mm = len(codebooks)
     dim = sum(len(b[0]) for b in codebooks)
     bounds = _subspace_bounds(dim, mm)
@@ -741,20 +719,9 @@ def sq_match(
         )
         return _rank_and_project(scored, k, metric, round_scores)
 
-    qrows = (
-        queries.select(query_id_col, query_emb_col)
-        .dropna()
-        .limit(max_query_rows + 1)
-        .collect()
+    qids, qmat = collect_queries(
+        queries, query_id_col, query_emb_col, max_query_rows, "sq_match"
     )
-    if not qrows:
-        raise ValueError("queries side is empty")
-    if len(qrows) > max_query_rows:
-        raise ValueError(
-            f"sq_match broadcasts the query side (> {max_query_rows} rows)"
-        )
-    qids = [r[0] for r in qrows]
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
     mins = np.asarray(bounds[0], dtype=np.float64)
     maxs = np.asarray(bounds[1], dtype=np.float64)
     scale = np.where(maxs > mins, maxs - mins, 1.0) / 255.0

@@ -5,6 +5,16 @@ the same code runs unchanged on a multi-executor cluster: AQE handles runtime
 re-planning (skew joins, partition coalescing), Arrow is enabled for every
 pandas-UDF boundary, and shuffle partitions default to the core count rather
 than Spark's legacy 200.
+
+Python workers are forked from :mod:`docarray_spark.worker_daemon`
+(``spark.python.daemon.module``), not ``pyspark.daemon``: a reused PySpark
+worker otherwise spends about 150-200 ms of CPU per Arrow task re-reading
+the zip archives on its import path and collecting its whole heap, more
+than a 10k-row ``match`` kernel costs (that module's docstring says why). The
+package must therefore be importable by the executors' Python at start-up
+(installed, or on ``PYTHONPATH`` as set below), not only shipped per task
+with ``--py-files``; ``extra_conf`` can set the daemon module back to
+``pyspark.daemon`` like any other setting.
 """
 
 from __future__ import annotations
@@ -47,6 +57,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
+        .config("spark.python.daemon.module", "docarray_spark.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

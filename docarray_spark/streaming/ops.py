@@ -53,6 +53,29 @@ def read_stream(
     return reader.load(path)
 
 
+def _with_watermark(sdf: DataFrame, ts_col: str, watermark: str) -> DataFrame:
+    """``sdf.withWatermark(ts_col, watermark)``, or ``sdf`` unchanged when an
+    upstream operator (``streaming_dedup`` feeding ``session_windows``, say)
+    already set that watermark. Spark 4.1 refuses to redefine a watermark
+    ("Redefining watermark is disallowed") when the query starts; the
+    event-time column carries the upstream delay as ``spark.watermarkDelayMs``
+    metadata, so a chain on the same column and delay reuses it, and any
+    other upstream watermark raises here, before the query runs."""
+    key = "spark.watermarkDelayMs"
+    upstream = {f.name: f.metadata[key] for f in sdf.schema.fields if key in f.metadata}
+    out = sdf.withWatermark(ts_col, watermark)
+    if not upstream:
+        return out
+    delay = out.schema[ts_col].metadata[key]
+    if upstream != {ts_col: delay}:
+        raise ValueError(
+            f"the stream already carries an event-time watermark (delay ms by "
+            f"column: {upstream}); a chained operator can only reuse it, but "
+            f"asks for {ts_col!r} with {watermark!r} ({delay} ms)"
+        )
+    return sdf
+
+
 def streaming_find(sdf: DataFrame, query: dict) -> DataFrame:
     """Mongo-QL filter on a stream — the exact batch compiler
     (``queryset/compiler.py``); stateless, so semantics are identical."""
@@ -69,7 +92,7 @@ def streaming_dedup(
     first arrival within the watermark horizon. State is evicted past the
     watermark — bounded memory at 100 TB/day rates."""
     sdf = with_utc_timestamp(sdf, ts_col)
-    fp = sdf.withColumn("_fp", fingerprint_expr(cols)).withWatermark(ts_col, watermark)
+    fp = _with_watermark(sdf.withColumn("_fp", fingerprint_expr(cols)), ts_col, watermark)
     return fp.dropDuplicatesWithinWatermark(["_fp"]).drop("_fp")
 
 
@@ -95,8 +118,8 @@ def streaming_fingerprint_dedup(
     from docarray_spark.operators.dedup import simhash_col
 
     sdf = with_utc_timestamp(sdf, ts_col)
-    fp = sdf.withColumn(out_col, simhash_col(text_col, bits)).withWatermark(
-        ts_col, watermark
+    fp = _with_watermark(
+        sdf.withColumn(out_col, simhash_col(text_col, bits)), ts_col, watermark
     )
     return fp.dropDuplicatesWithinWatermark([out_col])
 
@@ -114,7 +137,7 @@ def windowed_counts(
     sdf = with_utc_timestamp(sdf, ts_col)
     w = F.window(F.col(ts_col), window_duration, slide or window_duration)
     return (
-        sdf.withWatermark(ts_col, watermark)
+        _with_watermark(sdf, ts_col, watermark)
         .groupBy(w.alias("window"), *[F.col(c) for c in group_cols])
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
         .select(
@@ -151,7 +174,7 @@ def session_windows(
     if value_col is not None:
         aggs.append(F.round(F.sum(value_col), 6).alias("sum_value"))
     return (
-        sdf.withWatermark(ts_col, watermark)
+        _with_watermark(sdf, ts_col, watermark)
         .groupBy(F.session_window(F.col(ts_col), gap).alias("session"), *key_cols)
         .agg(*aggs)
         .select(
@@ -186,8 +209,8 @@ def stream_interval_join(
     Result equals the batch inner interval join of the same frames — an
     exact SQL oracle exists.
     """
-    l = with_utc_timestamp(left, left_ts).withWatermark(left_ts, watermark)
-    r = with_utc_timestamp(right, right_ts).withWatermark(right_ts, watermark)
+    l = _with_watermark(with_utc_timestamp(left, left_ts), left_ts, watermark)
+    r = _with_watermark(with_utc_timestamp(right, right_ts), right_ts, watermark)
     cond = (
         (F.col(right_ts) >= F.col(left_ts) - F.expr(f"INTERVAL {max_lag_seconds} SECONDS"))
         & (F.col(right_ts) <= F.col(left_ts))
@@ -291,8 +314,7 @@ def stateful_running_agg(
         yield pd.DataFrame([[*key, n, total, peak]], columns=[*key_cols, "n", "total", "peak"])
 
     return (
-        with_utc_timestamp(sdf, ts_col)
-        .withWatermark(ts_col, watermark)
+        _with_watermark(with_utc_timestamp(sdf, ts_col), ts_col, watermark)
         .groupBy(*key_cols)
         .applyInPandasWithState(
             _update, out_schema, state_schema, "update",

@@ -322,6 +322,43 @@ def test_match_query_side_budget_guard(spark):
     assert out.count() == 24
 
 
+@pytest.mark.parametrize("op", ["match", "ivf_match", "pq_match", "hnsw_match"])
+def test_query_collect_names_degenerate_query_ids(spark, op):
+    """Every broadcast-query operator collects its queries through
+    ``functions/vectors.py::collect_queries``: a query vector with a NULL
+    element, or of another length than the first row, raises ValueError
+    naming the operator and the query ids; an empty side names the
+    operator too."""
+    from docarray_spark.operators.ann import ivf_match
+    from docarray_spark.operators.hnsw import hnsw_match
+    from docarray_spark.operators.pq import pq_match
+
+    corpus = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.5]) for i in range(8)], "id long, embedding array<float>"
+    )
+    call = {
+        "match": lambda q: match(corpus, q, k=2),
+        "ivf_match": lambda q: ivf_match(
+            corpus, q, k=2, n_cells=2, n_probe=1, vectorized=True
+        ),
+        "pq_match": lambda q: pq_match(corpus, q, [[[0.0, 0.0, 0.0]]], k=2),
+        "hnsw_match": lambda q: hnsw_match(corpus, q, k=2),
+    }[op]
+    schema = "id long, embedding array<float>"
+    null_elem = spark.createDataFrame(
+        [(100, [1.0, 2.0, 3.0]), (101, [1.0, None, 3.0]), (102, [None, 0.0, 0.0])], schema
+    )
+    with pytest.raises(ValueError, match=rf"{op}: .*NULL element.*\[101, 102\]"):
+        call(null_elem)
+    ragged = spark.createDataFrame(
+        [(200, [1.0, 2.0, 3.0]), (201, [1.0, 2.0]), (202, [1.0, 2.0, 3.0, 4.0])], schema
+    )
+    with pytest.raises(ValueError, match=rf"{op}: .*one length \(3\).*\[201, 202\]"):
+        call(ragged)
+    with pytest.raises(ValueError, match=rf"{op}: queries side is empty"):
+        call(null_elem.filter("id < 0"))
+
+
 def test_find_by_vectors_backend_dispatch(spark, sf_dir):
     """find(np_matrix) dispatches to the ANN backends the way the
     reference's storage classes do (memory=exact, annlite/qdrant=HNSW):

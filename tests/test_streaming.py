@@ -180,6 +180,29 @@ def test_session_windows_drop_late_rows(spark, tmp_path):
     assert u1[0].n_events == 2 and u1[0].sum_value == 2.0
 
 
+def test_dedup_then_session_windows_chain(spark, tmp_path):
+    """``session_windows`` consumes ``streaming_dedup``'s output: it reuses
+    the upstream watermark the event-time column carries instead of
+    redefining it (Spark 4.1 refuses that when the query starts), and a
+    chained operator asking for another delay raises before running."""
+    from docarray_spark.streaming import session_windows
+
+    d = str(tmp_path / "chain")
+    # user 1's second event arrives twice; user 99 advances the watermark
+    _ts_rows(spark, [(1, 1000, 1.0), (1, 1010, 2.0), (1, 1010, 2.0), (99, 10000, 0.0)]) \
+        .coalesce(1).write.mode("append").parquet(d)
+    sdf = read_stream(spark, d, "user_id long, ts timestamp, value double")
+    deduped = streaming_dedup(sdf, ["user_id", "ts", "value"], ts_col="ts",
+                              watermark="100 seconds")
+    with pytest.raises(ValueError, match="already carries an event-time watermark"):
+        session_windows(deduped, "ts", ["user_id"], watermark="200 seconds")
+    out = session_windows(deduped, "ts", ["user_id"], gap="30 seconds",
+                          watermark="100 seconds", value_col="value")
+    run_to_memory_sink(out, "t_chain_sess")
+    u1 = [r for r in spark.table("t_chain_sess").collect() if r.user_id == 1]
+    assert [(r.n_events, r.sum_value) for r in u1] == [(2, 3.0)]
+
+
 def test_stream_interval_join_drops_late_rows(spark, tmp_path):
     """VERDICT r2 #9: a right-side row behind the global watermark produces
     no join output even though it satisfies the interval condition."""
